@@ -69,8 +69,7 @@ class EngineConfig:
     shuffle_partitions: int = 32
     # salt fan-out for hot keys in the inverted-index candidate join
     skew_salt_buckets: int = 8
-    # connected-components: checkpoint lineage every k iterations
-    cc_checkpoint_every: int = 3
+    # connected-components: round cap of the large/small-star loop
     cc_max_iterations: int = 50
     # deterministic seed for everything the reference left unseeded
     seed: int = 42

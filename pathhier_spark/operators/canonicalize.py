@@ -18,11 +18,18 @@ Skew handling:
   * star operations group by node id; hub nodes concentrate rows but both
     star steps are simple min-aggregations (partial aggregation map-side),
     so hot keys cost one combiner pass, not a shuffle explosion.
-  * lineage is cut with localCheckpoint every `checkpoint_every` rounds —
-    iterative plans otherwise grow exponentially in Catalyst.
+  * lineage is cut with localCheckpoint every round — iterative plans
+    otherwise grow exponentially in Catalyst.
+
+Ontology-sized graphs skip the distributed rounds: union_find_labels is the
+reference's own driver-side union-find, used by the pipeline's
+canonicalize_classes, where each star round would be a Spark job over a few
+hundred rows.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -103,7 +110,6 @@ def connected_components(
     a: str = "xref_a",
     b: str = "xref_b",
     max_iterations: int = config.EngineConfig.cc_max_iterations,
-    checkpoint_every: int = config.EngineConfig.cc_checkpoint_every,
 ) -> DataFrame:
     """Undirected CC. Input: edge list (self-loops allowed — they register
     singleton nodes). Output: (node STRING, component STRING) where the
@@ -181,6 +187,29 @@ def assign_local_ids(components: DataFrame) -> DataFrame:
     return components.join(ids, "component").select(
         *components.columns, "local_id"
     )
+
+
+def union_find_labels(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Driver-side union-find (pathway_utils.py:116-130 merge_similar, with
+    full transitive closure): node -> smallest node of its component, the
+    same label connected_components assigns. Self-pairs register singleton
+    nodes. The smaller root always wins a union, so every root is its
+    component's minimum; path halving keeps long synonym chains flat."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
 
 
 def cc_incremental(

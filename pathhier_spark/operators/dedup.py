@@ -160,7 +160,14 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Verify candidate pairs with exact shingle-set Jaccard; keep pairs with
-    jaccard >= threshold. Output: (id_a, id_b, jacc)."""
+    jaccard >= threshold. Output: (id_a, id_b, jacc).
+
+    The shingle sets are pinned in executor storage by a localCheckpoint
+    that is never unpersisted: their blocks are freed only when the driver
+    garbage-collects the dead checkpoint. get_spark sets a 30 s
+    spark.cleaner.periodicGC.interval for this; a session built elsewhere
+    keeps Spark's 30 min default and can pile up dead shingle blocks across
+    calls in a long-lived driver."""
     # lazy checkpoint: both join sides read the same shingle-set frame —
     # without materialization the full tokenize+shingle pass over the
     # corpus executes once per side

@@ -22,8 +22,46 @@ import json
 import os
 import time
 from collections.abc import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _hidden(name: str) -> bool:
+    # the names Spark's file listing skips (_SUCCESS, _temporary, .crc, ...)
+    return name.startswith(("_", "."))
+
+
+def footer_row_counts(out: str, partition_by: list[str]) -> list[dict]:
+    """Per-partition lineage rows of a committed parquet directory, summed
+    from the data files' footers — no Spark job. Partitioned outputs get one
+    row per non-empty partition directory, labelled `col=value/...` with the
+    value as its directory name spells it (unescaped; the null partition
+    reads `None`); unpartitioned outputs get one `*` row."""
+    import pyarrow.parquet as pq
+
+    counts: dict[str, int] = {}
+    for root, dirs, files in os.walk(out):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        n = sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for f in files
+            if f.endswith(".parquet") and not _hidden(f)
+        )
+        if n:
+            values = os.path.relpath(root, out).split(os.sep)[: len(partition_by)]
+            label = "/".join(
+                f"{c}={_partition_value(v)}" for c, v in zip(partition_by, values)
+            )
+            counts[label] = counts.get(label, 0) + n
+    if not partition_by:
+        return [{"partition": "*", "rows": counts.get("", 0)}]
+    return [{"partition": k, "rows": v} for k, v in sorted(counts.items())]
+
+
+def _partition_value(component: str) -> str:
+    value = unquote(component.split("=", 1)[1])
+    return "None" if value == "__HIVE_DEFAULT_PARTITION__" else value
 
 
 class CheckpointManager:
@@ -74,23 +112,8 @@ class CheckpointManager:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
-        committed = self.spark.read.parquet(out)
-        # per-partition lineage rows (north rule): row counts per partition
-        # value for partitioned stages, one total row otherwise
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            part_rows = [
-                {"partition": "/".join(f"{c}={r[c]}" for c in partition_by),
-                 "rows": r["n"]}
-                for r in committed.groupBy(*partition_by)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            ]
-            n = sum(p["rows"] for p in part_rows)
-        else:
-            n = committed.count()
-            part_rows = [{"partition": "*", "rows": n}]
+        part_rows = footer_row_counts(out, partition_by or [])
+        n = sum(p["rows"] for p in part_rows)
         self._append_lineage(
             {
                 "stage": name,
@@ -102,4 +125,4 @@ class CheckpointManager:
                 "partition_rows": json.dumps(part_rows),
             }
         )
-        return committed
+        return self.spark.read.parquet(out)

@@ -6,6 +6,13 @@
 Each stage is a pure DataFrame -> DataFrame function; run_pipeline wires
 them through CheckpointManager so any stage resumes idempotently.
 
+Fixed Spark overhead per call is kept off ontology-sized work:
+canonicalize_classes collects the synonym graph once and merges it with a
+driver-side union-find; bootstrap_rescore_links fits its LR on the seed
+table without running the bootstrap iterations its model never uses; and
+run_pipeline_incremental evaluates a batch's mentions and edges once each,
+however many branches of the commit read them.
+
 Linking semantics (reference chain): token inverted-index candidate join
 with IDF scoring (candidate_selector.py:148-178) capped at top-20
 (constants.py:16), then name/definition channel scores fused
@@ -17,13 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pathhier_spark import config
 from pathhier_spark.functions.text import jaccard, tokenize
-from pathhier_spark.operators.canonicalize import (
-    assign_local_ids,
-    connected_components,
-)
+from pathhier_spark.operators.canonicalize import union_find_labels
 from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
 from pathhier_spark.operators.linking import candidate_pairs
 from pathhier_spark.plans.checkpoint import CheckpointManager
@@ -222,20 +227,34 @@ def assemble_triples(mentions: DataFrame, links: DataFrame) -> DataFrame:
 def canonicalize_classes(ontology: DataFrame) -> DataFrame:
     """Canonical ids over the ontology synonym-xref graph: classes sharing a
     synonym xref merge (G1-G3 semantics). Output: (class_id, canonical_id,
-    local_id)."""
-    pairs = ontology.select(
-        F.col("class_id").alias("xref_a"), F.col("class_id").alias("xref_b")
-    ).union(
-        ontology.select(
-            F.col("class_id").alias("xref_a"), F.explode("synonyms").alias("xref_b")
-        )
+    local_id), one row per ontology class.
+
+    The graph is ontology-sized, so it is collected once and merged with
+    the reference's driver-side union-find (union_find_labels) instead of
+    Spark's per-round star jobs — the same trade link_mentions makes when
+    it broadcasts ontology postings from the driver. canonical_id is the
+    smallest node of the class's component, which may be a synonym xref
+    rather than a class id; local_id is dense from 0 in canonical_id order
+    (Python str order is Spark's UTF-8 binary order). Null class ids and
+    null synonym elements are not nodes. The result is a small local frame."""
+    rows = [
+        (r["class_id"], r["synonyms"])
+        for r in ontology.select("class_id", "synonyms").collect()
+        if r["class_id"] is not None
+    ]
+    labels = union_find_labels(
+        (cid, x) for cid, syns in rows for x in [cid, *(syns or ())] if x is not None
     )
-    comp = connected_components(pairs)
-    with_ids = assign_local_ids(comp)
-    return (
-        ontology.select("class_id")
-        .join(with_ids, F.col("class_id") == F.col("node"))
-        .select("class_id", F.col("component").alias("canonical_id"), "local_id")
+    local_ids = {c: i for i, c in enumerate(sorted(set(labels.values())))}
+    schema = T.StructType(
+        [
+            ontology.schema["class_id"],
+            T.StructField("canonical_id", T.StringType(), True),
+            T.StructField("local_id", T.LongType(), False),
+        ]
+    )
+    return ontology.sparkSession.createDataFrame(
+        [(cid, labels[cid], local_ids[labels[cid]]) for cid, _ in rows], schema
     )
 
 
@@ -373,9 +392,13 @@ def run_pipeline_incremental(
     extracted = with_extracted_text(new_documents).select(
         "url", "warc_ts", "lang", "extracted_text"
     )
+    # mentions feed both link sides and assemble; edges feed the write, or
+    # the upserts and the tombstone anti-join. Each is evaluated once per
+    # batch (mentions first, so edges reads it cached) and released after
+    # the commit, instead of re-running extraction and linking per branch.
     mentions = extract_mentions(
         extracted.withColumnRenamed("extracted_text", "text")
-    )
+    ).persist()
     links = link_mentions(
         mentions.select(F.col("subj_mention").alias("mention")).union(
             mentions.select(F.col("obj_mention").alias("mention"))
@@ -384,36 +407,42 @@ def run_pipeline_incremental(
     )
     triples = assemble_triples(mentions, links)
     canon = canonicalize_classes(ontology)
-    edges = canonical_edges(triples, canon)
+    edges = canonical_edges(triples, canon).persist()
     fingerprint = f"batch:{batch_id}"
-    if wh.manifest(edges_table) is None:
-        # first batch creates the table (and pins the partition layout
-        # every later merge preserves)
-        wh.write(
-            edges, edges_table, partition_by=["pred"], fingerprint=fingerprint
-        )
-    else:
-        upserts = edges.withColumn("_deleted", F.lit(False))
-        tombstones = (
-            new_documents.select("url")
-            .distinct()
-            .join(edges.select("url").distinct(), "url", "left_anti")
-            .select(
-                F.lit(None).cast("string").alias("subj"),
-                F.lit(None).cast("string").alias("pred"),
-                F.lit(None).cast("string").alias("obj"),
-                "url",
-                F.lit(None).cast("string").alias("provenance"),
-                F.lit(True).alias("_deleted"),
+    try:
+        mentions.count()
+        edges.count()
+        if wh.manifest(edges_table) is None:
+            # first batch creates the table (and pins the partition layout
+            # every later merge preserves)
+            wh.write(
+                edges, edges_table, partition_by=["pred"], fingerprint=fingerprint
             )
-        )
-        wh.merge(
-            upserts.unionByName(tombstones),
-            edges_table,
-            key="url",
-            fingerprint=fingerprint,
-            delete_col="_deleted",
-        )
+        else:
+            upserts = edges.withColumn("_deleted", F.lit(False))
+            tombstones = (
+                new_documents.select("url")
+                .distinct()
+                .join(edges.select("url").distinct(), "url", "left_anti")
+                .select(
+                    F.lit(None).cast("string").alias("subj"),
+                    F.lit(None).cast("string").alias("pred"),
+                    F.lit(None).cast("string").alias("obj"),
+                    "url",
+                    F.lit(None).cast("string").alias("provenance"),
+                    F.lit(True).alias("_deleted"),
+                )
+            )
+            wh.merge(
+                upserts.unionByName(tombstones),
+                edges_table,
+                key="url",
+                fingerprint=fingerprint,
+                delete_col="_deleted",
+            )
+    finally:
+        edges.unpersist()
+        mentions.unpersist()
     return {
         "mentions": mentions,
         "links": links,
@@ -427,8 +456,6 @@ def bootstrap_rescore_links(
     spark: SparkSession,
     links: DataFrame,
     ontology: DataFrame,
-    *,
-    n_iterations: int = 3,
 ) -> DataFrame:
     """Bootstrap re-scoring stage (M3, pw_aligner.py:485-530 recast): the
     link table's (mention, class name) pairs are featurized with the exact
@@ -437,11 +464,17 @@ def bootstrap_rescore_links(
     exact alias/synonym surface matches, hard negatives from candidate
     ranks 4.., easy negatives pseudo-random — see bootstrap_seed_labels.
     Falls back to link-score extremes only if no alias match exists (e.g. a
-    corpus with zero annotated surface forms). The LR loop then re-scores
-    every link. Output: links + (p1 DOUBLE) calibrated score."""
+    corpus with zero annotated surface forms). An LR fit on the seed table
+    then re-scores every link. Output: links + (p1 DOUBLE) calibrated score.
+
+    The model is the one bootstrap_loop returns, without its iterations:
+    the loop's final fit drops every row its iterations added
+    (pw_aligner.py:587, P8), so that model is exactly fit_lr over the
+    collected seed table (asserted equal in tests)."""
     from pathhier_spark.operators.bootstrap import (
-        bootstrap_loop,
         bootstrap_seed_labels,
+        collect_training_rows,
+        fit_lr,
     )
     from pathhier_spark.operators.linking import (
         FEATURE_COLS,
@@ -479,12 +512,7 @@ def bootstrap_rescore_links(
             .otherwise(F.lit(0))
             .alias("label"),
         )
-    model, _train = bootstrap_loop(
-        spark,
-        feats.select("s_id", "t_id", *FEATURE_COLS),
-        seed,
-        n_iterations=n_iterations,
-    )
+    model = fit_lr(collect_training_rows(seed.localCheckpoint(eager=True)))
     return lr_score(feats, model.coef, model.intercept).select(
         F.col("s_id").alias("mention"),
         F.col("t_id").alias("class_id"),

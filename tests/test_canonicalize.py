@@ -1,6 +1,7 @@
 """Connected components vs the union-find oracle (FIXTURES.md §4 cases)."""
 
 import random
+import time
 
 from pathhier_spark.functions.oracle import UnionFind
 from pathhier_spark.operators.canonicalize import (
@@ -136,3 +137,121 @@ def test_cc_incremental_matches_scratch_and_spares_untouched(spark):
         for r in cc_incremental(hist, empty).collect()
     }
     assert got2 == {r["node"]: r["component"] for r in hist.collect()}
+
+
+# ---------------------- pipeline class canonicalization ----------------------
+
+
+def _distributed_canonicalize(onto):
+    """canonicalize_classes' former Spark-side formulation: star-round CC
+    over (class, class) + (class, synonym) pairs, then assign_local_ids."""
+    from pyspark.sql import functions as F
+
+    pairs = onto.select(
+        F.col("class_id").alias("xref_a"), F.col("class_id").alias("xref_b")
+    ).union(
+        onto.select(
+            F.col("class_id").alias("xref_a"), F.explode("synonyms").alias("xref_b")
+        )
+    )
+    with_ids = assign_local_ids(connected_components(pairs))
+    return (
+        onto.select("class_id")
+        .join(with_ids, F.col("class_id") == F.col("node"))
+        .select("class_id", F.col("component").alias("canonical_id"), "local_id")
+    )
+
+
+def _synonym_graph(seed):
+    """Random class -> synonyms table: synonym chains, empty and null lists,
+    self-synonyms, xrefs sorting below the class ids, non-ASCII ids."""
+    rng = random.Random(seed)
+    classes = [f"P:{i:03d}" for i in range(80)] + ["Ü:1", "日本:2", "𝔸:3", "é:4"]
+    xrefs = [f"CHAIN:{i:02d}" for i in range(50)] + ["0:low", "A:low", "ß", "Z"]
+    rows = []
+    for i, cid in enumerate(classes):
+        kind = rng.random()
+        if kind < 0.1:
+            syns = None
+        elif kind < 0.2:
+            syns = []
+        else:
+            syns = rng.sample(xrefs, rng.randint(1, 3))
+            if rng.random() < 0.2:
+                syns.append(cid)
+            if rng.random() < 0.2:
+                syns.append(rng.choice(classes))
+        rows.append((cid, syns))
+    # a chain of classes linked only through consecutive shared xrefs
+    rows += [(f"Q:{i:02d}", [f"LINK:{i:02d}", f"LINK:{i + 1:02d}"]) for i in range(12)]
+    return rows
+
+
+def test_canonicalize_classes_matches_distributed_cc(spark):
+    from pathhier_spark.plans.pipeline import canonicalize_classes
+
+    onto = spark.createDataFrame(
+        _synonym_graph(1), "class_id string, synonyms array<string>"
+    )
+    got = canonicalize_classes(onto)
+    want = _distributed_canonicalize(onto)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_canonicalize_classes_labels(spark):
+    from pathhier_spark.plans.pipeline import canonicalize_classes
+
+    onto = spark.createDataFrame(
+        [("B", ["CHAIN:1"]), ("C", ["CHAIN:1", "D"]), ("D", None), ("E", [])],
+        "class_id string, synonyms array<string>",
+    )
+    got = {r["class_id"]: (r["canonical_id"], r["local_id"])
+           for r in canonicalize_classes(onto).collect()}
+    # "B" < "C" < "CHAIN:1" < "D": the chain's label is its smallest node
+    assert got == {"B": ("B", 0), "C": ("B", 0), "D": ("B", 0), "E": ("E", 1)}
+
+
+def test_canonicalize_classes_ignores_null_xrefs(spark):
+    """A null synonym element is no node: it must not take local_id 0 and
+    shift every real id by one."""
+    from pathhier_spark.plans.pipeline import canonicalize_classes
+
+    onto = spark.createDataFrame(
+        [("A", ["X"]), ("B", ["X", None]), ("C", [None])],
+        "class_id string, synonyms array<string>",
+    )
+    got = {r["class_id"]: (r["canonical_id"], r["local_id"])
+           for r in canonicalize_classes(onto).collect()}
+    assert got == {"A": ("A", 0), "B": ("A", 0), "C": ("C", 1)}
+
+
+def test_canonicalize_classes_job_count(spark):
+    """One collect of the ontology plus the caller's materialization."""
+    from pathhier_spark.plans.pipeline import canonicalize_classes
+
+    sc = spark.sparkContext
+    onto = spark.createDataFrame(
+        _synonym_graph(4), "class_id string, synonyms array<string>"
+    ).localCheckpoint(eager=True)
+    group = "test_canonicalize_classes_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        canonicalize_classes(onto).localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store asynchronously
+    deadline = time.monotonic() + 10
+    while not sc.statusTracker().getJobIdsForGroup(group):
+        assert time.monotonic() < deadline, "no job recorded for the group"
+        time.sleep(0.05)
+    time.sleep(0.5)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_union_find_labels_long_chain():
+    from pathhier_spark.operators.canonicalize import union_find_labels
+
+    pairs = [(f"X:{i:05d}", f"X:{i + 1:05d}") for i in range(5000)][::-1]
+    labels = union_find_labels(pairs)
+    assert set(labels.values()) == {"X:00000"} and len(labels) == 5001

@@ -177,10 +177,17 @@ def test_link_mentions_nonbroadcast_regime_identical(spark, corpus):
 # --------------------------- incremental ingest ---------------------------
 
 
-def test_incremental_batches_equal_full_run(spark, corpus, tmp_path_factory):
+def test_incremental_batches_equal_full_run(spark, corpus, tmp_path_factory,
+                                           monkeypatch):
     """Batch-wise incremental ingest == one full run over the union: no
     stage carries corpus-level state (linking IDF is ontology-side), so
-    splitting the crawl into batches must not change a single edge."""
+    splitting the crawl into batches must not change a single edge. Each
+    batch runs the html->text UDF once per batch document, for the
+    table-creating write and for a merge alike."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from pathhier_spark.operators import extract
     from pathhier_spark.plans.pipeline import run_pipeline_incremental
 
     docs, onto, *_ = corpus
@@ -191,10 +198,25 @@ def test_incremental_batches_equal_full_run(spark, corpus, tmp_path_factory):
     full = run_pipeline(spark, docs, onto, full_root)
     full_edges = {tuple(r) for r in full["edges"].select(*cols).collect()}
 
+    calls = spark.sparkContext.accumulator(0)
+    extract_text_py = extract.extract_text_py
+
+    def counting_udf():
+        @pandas_udf("string")
+        def _udf(html: pd.Series) -> pd.Series:
+            calls.add(len(html))
+            return html.map(extract_text_py)
+
+        return _udf
+
+    monkeypatch.setattr(extract, "extract_text_udf", counting_udf)
     b1 = docs.filter(F.crc32(F.col("url")) % 2 == 0)
     b2 = docs.filter(F.crc32(F.col("url")) % 2 == 1)
+    n1, n2 = b1.count(), b2.count()
     run_pipeline_incremental(spark, b1, onto, wh_root, "b1")
+    assert calls.value == n1
     out2 = run_pipeline_incremental(spark, b2, onto, wh_root, "b2")
+    assert calls.value == n1 + n2
     inc_edges = {tuple(r) for r in out2["edges"].select(*cols).collect()}
     assert inc_edges == full_edges
     # partition layout pinned by the first batch survives the merge
@@ -255,3 +277,76 @@ def test_incremental_recrawl_replaces_and_tombstones(spark, corpus,
     # replaying the same batch id is a no-op (idempotent resume)
     out4 = run_pipeline_incremental(spark, empty, onto, wh_root, "b3")
     assert out4["edges"].count() == n_other_before
+
+
+def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus):
+    """bootstrap_rescore_links fits the seed table directly; its p1 must be
+    the score of the model bootstrap_loop returns over the same inputs."""
+    from pathhier_spark.operators.bootstrap import (
+        bootstrap_loop,
+        bootstrap_seed_labels,
+    )
+    from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
+    from pathhier_spark.operators.linking import FEATURE_COLS, lr_score, pair_features
+    from pathhier_spark.plans.pipeline import bootstrap_rescore_links, link_mentions
+
+    docs, onto, *_ = corpus
+    m = extract_mentions(
+        with_extracted_text(docs).select("url", F.col("extracted_text").alias("text"))
+    )
+    links = link_mentions(
+        m.select(F.col("subj_mention").alias("mention")).union(
+            m.select(F.col("obj_mention").alias("mention"))
+        ),
+        onto,
+    ).localCheckpoint(eager=True)
+    got = {
+        (r["mention"], r["class_id"]): r["p1"]
+        for r in bootstrap_rescore_links(spark, links, onto).collect()
+    }
+
+    class_names = F.broadcast(onto.select("class_id", "name"))
+    feats = pair_features(links.join(class_names, "class_id"), "mention", "name").select(
+        F.col("mention").alias("s_id"), F.col("class_id").alias("t_id"), *FEATURE_COLS
+    ).localCheckpoint(eager=True)
+    seed_pairs = bootstrap_seed_labels(
+        feats.select(F.col("s_id").alias("mention")).distinct(), onto
+    )
+    assert seed_pairs.limit(1).count() == 1
+    seed = pair_features(
+        seed_pairs.join(class_names, "class_id"), "mention", "name"
+    ).select(*FEATURE_COLS, "label")
+    model, _ = bootstrap_loop(spark, feats, seed, n_iterations=3)
+    want = {
+        (r["s_id"], r["t_id"]): r["p1"]
+        for r in lr_score(feats, model.coef, model.intercept)
+        .select("s_id", "t_id", F.round("p1", 6).alias("p1"))
+        .collect()
+    }
+    assert got == want
+
+
+def test_checkpoint_lineage_counts_match_spark(spark, tmp_path):
+    """Lineage row counts come from the parquet footers; they must equal
+    Spark's counts, partition values included (escaped, null, empty)."""
+    from pathhier_spark.plans.checkpoint import CheckpointManager
+
+    preds = ["a/b", "x=y", "é", None, "", "plain", "plain", "50%"]
+    df = spark.createDataFrame(
+        [(p, i) for i in range(5) for p in preds], "pred string, n int"
+    ).repartition(3)
+    cp = CheckpointManager(spark, str(tmp_path))
+    part = cp.stage("part", lambda: df, partition_by=["pred"])
+    flat = cp.stage("flat", lambda: df)
+    rows = {r["stage"]: r for r in cp.lineage()}
+
+    want = {
+        f"pred={r['pred']}": r["count"]
+        for r in part.groupBy("pred").count().collect()
+    }
+    got = {p["partition"]: p["rows"] for p in json.loads(rows["part"]["partition_rows"])}
+    assert got == want and rows["part"]["rows"] == df.count() == 40
+    assert json.loads(rows["flat"]["partition_rows"]) == [
+        {"partition": "*", "rows": flat.count()}
+    ]
+    assert rows["flat"]["rows"] == 40
