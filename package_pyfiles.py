@@ -3,7 +3,7 @@ target): zips the pathhier_spark package into dist/pathhier_spark.zip.
 
 Usage:
     python package_pyfiles.py
-    spark-submit --py-files dist/pathhier_spark.zip bench.py
+    spark-submit --py-files dist/pathhier_spark.zip app.py
 """
 
 from __future__ import annotations

@@ -5,14 +5,11 @@ so the judge can check parity. These are the knobs that shape candidate
 generation, thresholds, fusion weights, and the bootstrap loop.
 """
 
-from dataclasses import dataclass, field
 import math
 
 
 # --- reference constants (pathhier/constants.py) ---------------------------
 
-# pathhier/constants.py:10
-CHARACTER_NGRAM_LEN = 5
 # pathhier/constants.py:13 — IDF floor used to prune frequent tokens
 IDF_LIMIT = math.log(20)
 # pathhier/constants.py:16 — candidate cap per source entity
@@ -25,9 +22,6 @@ BOW_SIMSCORE_THRESHOLD = 0.1
 NUM_BOOTSTRAP_MODELS = 8
 # pathhier/constants.py:26 — fraction of predictions kept per bootstrap iter
 KEEP_TOP_N_PERCENT_MATCHES = 0.0025
-# pathhier/constants.py:32-33 — split fractions
-DEV_DATA_PORTION = 0.2
-TEST_DATA_PORTION = 0.1
 # pathhier/constants.py:36 — output cap per kb id
 KEEP_TOP_N_MATCHES = 10
 # pathhier/constants.py:39-41 — channel fusion weights (sum asserted = 1.0)
@@ -41,18 +35,6 @@ ALIGNMENT_SCORE_EPSILON = 0.01
 # pathhier/constants.py:238 — singleton gene-set size floor
 GENE_SET_MINIMUM_SIZE = 15
 
-# pathhier/constants.py:213-221 — the closed predicate vocabulary
-EDGE_TYPE_ATTRIB = {
-    "no_edge": 0,
-    "participant": 1,
-    "controller": 2,
-    "component": 3,
-    "member": 4,
-    "to": 5,
-    "other": 6,
-}
-PREDICATES = tuple(p for p in EDGE_TYPE_ATTRIB if p != "no_edge")
-
 # cluster_model.py:273-277 — skip entities with 0 or >10 xrefs during
 # canonicalization (promiscuous-hub guard; doubles as skew mitigation)
 MAX_XREFS_PER_ENTITY = 10
@@ -60,17 +42,7 @@ MAX_XREFS_PER_ENTITY = 10
 
 # --- engine-side tuning (ours, not the reference's) ------------------------
 
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Spark-side execution knobs. Defaults target local[32]; at cluster
-    scale raise shuffle_partitions to ~2-3x total executor cores."""
-
-    shuffle_partitions: int = 32
-    # salt fan-out for hot keys in the inverted-index candidate join
-    skew_salt_buckets: int = 8
-    # connected-components: round cap of the large/small-star loop
-    cc_max_iterations: int = 50
-    # deterministic seed for everything the reference left unseeded
-    seed: int = 42
-    extra_conf: dict = field(default_factory=dict)
+# salt fan-out for hot keys in the inverted-index candidate join
+SKEW_SALT_BUCKETS = 8
+# connected-components: round cap of the large/small-star loop
+CC_MAX_ITERATIONS = 50

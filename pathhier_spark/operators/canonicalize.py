@@ -109,7 +109,7 @@ def connected_components(
     edges: DataFrame,
     a: str = "xref_a",
     b: str = "xref_b",
-    max_iterations: int = config.EngineConfig.cc_max_iterations,
+    max_iterations: int = config.CC_MAX_ITERATIONS,
 ) -> DataFrame:
     """Undirected CC. Input: edge list (self-loops allowed — they register
     singleton nodes). Output: (node STRING, component STRING) where the

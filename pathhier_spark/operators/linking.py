@@ -117,7 +117,7 @@ def salted_candidate_pairs(
     target_id: str = "t_id",
     top_n: int = config.KEEP_TOP_N_CANDIDATES,
     hot_df_threshold: int = 1000,
-    salt_buckets: int = config.EngineConfig.skew_salt_buckets,
+    salt_buckets: int = config.SKEW_SALT_BUCKETS,
     target_doc_total: int | None = None,
 ) -> DataFrame:
     """candidate_pairs with explicit hot-key salting for the case where the

@@ -41,12 +41,8 @@ def get_spark(
         # groups: 10^3-10^5 per partition at ANY scale, local or cluster).
         # The in-memory map holds one small buffer per group, so the memory
         # cost is bounded by groups/partition x buffer size — raise the
-        # threshold so the hash path survives realistic group counts
-        # (overridable via env for low-memory executors).
-        .config(
-            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", "131072"),
-        )
+        # threshold so the hash path survives realistic group counts.
+        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
         # AQE coalesces post-shuffle partitions by BYTE size, but this
         # engine's hot columns (token arrays, shingle sets, embeddings)
         # are compute-dense: a 1 MB partition of shingle arrays carries
@@ -59,20 +55,14 @@ def get_spark(
         # the measured sweet spot: 64k over-fragments light aggregation
         # stages (q11/q07 +20-90% from task overhead), 1m starves the
         # array-verification stages (q85 8.5s vs 3.2s).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         # Long-running sessions (the bench runs ~60 queries; a production
         # driver runs micro-batches for days) accumulate localCheckpoint
         # RDD blocks whose driver-side references die with each query;
         # ContextCleaner only frees them after a driver GC, and the
         # default 30min periodicGC lets dead blocks pile up in executor
         # storage memory, degrading later queries. 30s bounds the pile.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30s"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "30s")
     )
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)

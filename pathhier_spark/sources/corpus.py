@@ -227,30 +227,3 @@ def to_spark(spark, corpus: SyntheticCorpus):
         "xref string, component string",
     )
     return docs, onto, gold_triples, gold_mentions, xref_pairs, gold_components
-
-
-def wrap_driver_documents(spark, sf_dir: str):
-    """Lift the driver's reduced documents table (doc_id, text, lang, source,
-    n_chars — TESTDATA.md) into the north-rule shape per FIXTURES.md §1:
-    url from doc_id, warc_ts from source bucket, html wraps text. Used by
-    bench.py so throughput is measured on driver data, not our synthetic."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.select(
-        F.concat(F.lit("https://example.org/doc/"), F.col("doc_id")).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(mins=F.regexp_replace("source", "src", "").cast("int"))
-        ).alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><title>doc</title></head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
