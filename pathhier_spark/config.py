@@ -42,7 +42,5 @@ MAX_XREFS_PER_ENTITY = 10
 
 # --- engine-side tuning (ours, not the reference's) ------------------------
 
-# salt fan-out for hot keys in the inverted-index candidate join
-SKEW_SALT_BUCKETS = 8
 # connected-components: round cap of the large/small-star loop
 CC_MAX_ITERATIONS = 50

@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pathhier_spark import config
-from pathhier_spark.operators.linking import FEATURE_COLS, lr_score
+from pathhier_spark.operators.linking import (
+    FEATURE_COLS,
+    alias_token_table,
+    candidate_pairs,
+    lr_score,
+)
 
 
 @dataclass
@@ -129,7 +134,6 @@ def bootstrap_seed_labels(
     seed table stays small no matter how large the mention corpus is.
     Output: (mention, class_id, label INT, provenance STRING)."""
     from pathhier_spark.functions.text import normalize_string, tokenize
-    from pathhier_spark.operators.linking import candidate_pairs
 
     aliases = ontology.select(
         F.col("class_id"), F.explode("aliases").alias("alias")
@@ -147,13 +151,9 @@ def bootstrap_seed_labels(
     m_tokens = pos_mentions.select(
         F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
     )
-    o_tokens = ontology.select(
-        F.col("class_id").alias("ent_id"),
-        F.array_distinct(
-            F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a)))
-        ).alias("tokens"),
-    )
-    cands = candidate_pairs(m_tokens, o_tokens, top_n=2 + n_hard).select(
+    cands = candidate_pairs(
+        m_tokens, alias_token_table(ontology), top_n=2 + n_hard
+    ).select(
         F.col("s_id").alias("mention"), F.col("t_id").alias("class_id"), "rank"
     )
     # reference slice [3:2+num_neg]: ranks 4..2+n_hard (n_hard-1 items)

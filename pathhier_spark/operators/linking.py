@@ -58,6 +58,20 @@ def entity_token_table(
     return df.select(F.col(id_col), F.array_distinct(merged).alias(out_tokens))
 
 
+def alias_token_table(ontology: DataFrame) -> DataFrame:
+    """Alias-ONLY token sets (ent_id, tokens) — the source for parent/child
+    structural expansion and for bootstrap hard-negative candidates. The
+    reference builds par_tokens/chd_tokens from relatives' ALIASES only
+    (candidate_selector.py:80-103: `kb[parent_id]['aliases']`,
+    `kb[child_id]['aliases']`), never their definitions."""
+    return ontology.select(
+        F.col("class_id").alias("ent_id"),
+        F.array_distinct(
+            F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a)))
+        ).alias("tokens"),
+    )
+
+
 def candidate_pairs(
     source_tokens: DataFrame,
     target_tokens: DataFrame,
@@ -97,83 +111,6 @@ def candidate_pairs(
         t = F.broadcast(t)
     scored = (
         s.join(t, "token")
-        .groupBy(source_id, target_id)
-        .agg(F.sum("idf").alias("cand_score"))
-    )
-    w = Window.partitionBy(source_id).orderBy(
-        F.col("cand_score").desc(), F.col(target_id)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-    )
-
-
-def salted_candidate_pairs(
-    source_tokens: DataFrame,
-    target_tokens: DataFrame,
-    *,
-    source_id: str = "s_id",
-    target_id: str = "t_id",
-    top_n: int = config.KEEP_TOP_N_CANDIDATES,
-    hot_df_threshold: int = 1000,
-    salt_buckets: int = config.SKEW_SALT_BUCKETS,
-    target_doc_total: int | None = None,
-) -> DataFrame:
-    """candidate_pairs with explicit hot-key salting for the case where the
-    target side is too large to broadcast (north rule: "salted hash-join-
-    and-score stage").
-
-    Tokens whose source-side document frequency exceeds hot_df_threshold are
-    split into `salt_buckets` sub-keys: the source row's salt is derived from
-    hash(source_id) (deterministic), and the target postings for hot tokens
-    are replicated once per bucket. The shuffle key becomes (token, salt), so
-    a token that would land 10^8 rows on one reducer spreads over k reducers.
-    Results are identical to candidate_pairs (verified in tests); cold tokens
-    pay nothing.
-    """
-    s = source_tokens.select(
-        F.col(source_tokens.columns[0]).alias(source_id),
-        F.explode(F.array_distinct(F.col(source_tokens.columns[1]))).alias("token"),
-    )
-    t_idf = idf_table(
-        target_tokens,
-        target_tokens.columns[0],
-        target_tokens.columns[1],
-        doc_total=target_doc_total,
-    )
-    t = target_tokens.select(
-        F.col(target_tokens.columns[0]).alias(target_id),
-        F.explode(F.array_distinct(F.col(target_tokens.columns[1]))).alias("token"),
-    ).join(t_idf, "token")
-
-    hot = s.groupBy("token").agg(F.count(F.lit(1)).alias("sdf")).filter(
-        F.col("sdf") > hot_df_threshold
-    ).select("token")
-    s_salted = s.join(F.broadcast(hot.withColumn("is_hot", F.lit(True))), "token", "left").select(
-        source_id,
-        "token",
-        F.when(
-            F.col("is_hot"),
-            F.pmod(F.xxhash64(F.col(source_id)), F.lit(salt_buckets)).cast("int"),
-        )
-        .otherwise(F.lit(0))
-        .alias("salt"),
-    )
-    buckets = F.broadcast(
-        hot.select(
-            "token", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("salt")
-        )
-    )
-    t_salted = t.join(buckets, "token", "left").select(
-        target_id, "token", "idf", F.coalesce(F.col("salt"), F.lit(0)).alias("salt")
-    )
-    # merge hint: this operator exists for the huge-source x huge-target
-    # regime where the join MUST be a shuffle join on (token, salt) — at
-    # small (test/bench) sizes Catalyst would otherwise auto-broadcast the
-    # SOURCE side (BuildLeft), a pathological inversion of the real plan
-    scored = (
-        s_salted.join(t_salted.hint("merge"), ["token", "salt"])
         .groupBy(source_id, target_id)
         .agg(F.sum("idf").alias("cand_score"))
     )

@@ -30,13 +30,13 @@ from pathhier_spark import config
 from pathhier_spark.functions.text import jaccard, tokenize
 from pathhier_spark.operators.canonicalize import union_find_labels
 from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
-from pathhier_spark.operators.linking import candidate_pairs
+from pathhier_spark.operators.linking import alias_token_table, candidate_pairs
 from pathhier_spark.plans.checkpoint import CheckpointManager
 
 
 def ontology_token_table(ontology: DataFrame) -> DataFrame:
     """Class token sets: aliases + definitions (candidate_selector.py:60-78;
-    parent/child token expansion J3 available via expand_structural_tokens)."""
+    link_mentions adds the J3 parent/child tokens via expand_structural_tokens)."""
     return ontology.select(
         F.col("class_id").alias("ent_id"),
         F.array_distinct(
@@ -46,19 +46,6 @@ def ontology_token_table(ontology: DataFrame) -> DataFrame:
                     F.flatten(F.transform(F.col("definition"), lambda d: tokenize(d))),
                 )
             )
-        ).alias("tokens"),
-    )
-
-
-def alias_token_table(ontology: DataFrame) -> DataFrame:
-    """Alias-ONLY token sets — the source for parent/child structural
-    expansion. The reference builds par_tokens/chd_tokens from relatives'
-    ALIASES only (candidate_selector.py:80-103: `kb[parent_id]['aliases']`,
-    `kb[child_id]['aliases']`), never their definitions."""
-    return ontology.select(
-        F.col("class_id").alias("ent_id"),
-        F.array_distinct(
-            F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a)))
         ).alias("tokens"),
     )
 
@@ -105,15 +92,7 @@ def expand_structural_tokens(ontology: DataFrame, tokens: DataFrame) -> DataFram
     )
 
 
-def link_mentions(
-    mentions: DataFrame,
-    ontology: DataFrame,
-    *,
-    threshold: float = config.SIMSCORE_THRESHOLD,
-    top_candidates: int = config.KEEP_TOP_N_CANDIDATES,
-    structural_tokens: bool = True,
-    broadcast_ontology: bool = True,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, ontology: DataFrame) -> DataFrame:
     """mention string -> class_id. Returns (mention, class_id, link_score).
 
     Chain: distinct mentions -> candidate join (broadcast ontology postings,
@@ -121,47 +100,29 @@ def link_mentions(
     def channel = max token-jaccard vs any definition -> 0.75/0.25 fusion ->
     threshold -> top-1 per mention. The mention side is huge (one row per
     distinct surface form) and never shuffles except the final window, which
-    keys on mention — uniform.
+    keys on mention — uniform. The ontology side is small enough to
+    broadcast, as canonicalize_classes already collects it to the driver.
 
-    structural_tokens=True folds each class's parent/child tokens into its
-    candidate-generation token set (J3, candidate_selector.py:80-107 — the
-    reference ALWAYS does this), so a mention sharing tokens only with a
+    Each class's candidate-generation token set includes its parents' and
+    children's alias tokens (J3, candidate_selector.py:80-107 — the
+    reference always does this), so a mention sharing tokens only with a
     class's parent can still surface that class as a candidate. Channel
     scoring is unchanged: structural tokens widen recall of the candidate
-    stage, the alias/definition jaccard channels still decide the link.
-
-    broadcast_ontology=False is the scale knob for dictionaries too large
-    to broadcast: the candidate join switches to salted_candidate_pairs
-    (hot-token splitting, shuffle join) and the class-record join drops its
-    broadcast hint so AQE picks the strategy. Identical output either way
-    (asserted in tests)."""
+    stage, the alias/definition jaccard channels still decide the link."""
     distinct_mentions = mentions.select(F.col("mention")).distinct()
     m_tokens = distinct_mentions.select(
         F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
     )
-    o_tokens = ontology_token_table(ontology)
-    if structural_tokens:
-        o_tokens = expand_structural_tokens(ontology, o_tokens)
-    if broadcast_ontology:
-        cands = candidate_pairs(
-            m_tokens, o_tokens, top_n=top_candidates, broadcast_target=True
-        )
-    else:
-        # dictionary too large to broadcast (the non-broadcastable regime):
-        # salted shuffle join with hot-token splitting — same output,
-        # BENCH/SKEW.md documents the 2.96x hot-key win
-        from pathhier_spark.operators.linking import salted_candidate_pairs
-
-        cands = salted_candidate_pairs(m_tokens, o_tokens, top_n=top_candidates)
+    o_tokens = expand_structural_tokens(ontology, ontology_token_table(ontology))
+    cands = candidate_pairs(m_tokens, o_tokens)  # broadcast, top-20
     # channel scores vs the class record (J5 pair expansion: mention x alias)
     classes = ontology.select(
         F.col("class_id").alias("t_id"),
         F.col("aliases"),
         F.col("definition"),
     )
-    cls = F.broadcast(classes) if broadcast_ontology else classes
     scored = (
-        cands.join(cls, "t_id")
+        cands.join(F.broadcast(classes), "t_id")
         .withColumn("m_toks", tokenize(F.col("s_id")))
         .withColumn(
             "name_s",
@@ -191,7 +152,7 @@ def link_mentions(
                 + config.DEF_WEIGHT * F.col("def_s")
             ).alias("link_score"),
         )
-        .filter(F.col("link_score") >= threshold)
+        .filter(F.col("link_score") >= config.SIMSCORE_THRESHOLD)
     )
     w = Window.partitionBy("s_id").orderBy(F.col("link_score").desc(), F.col("t_id"))
     return (
@@ -291,30 +252,53 @@ def canonical_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
+def _content_key(df: DataFrame, *cols) -> str:
+    """Row count and an order-insensitive content hash of `cols`, in one
+    aggregate job: two inputs get the same key only if they hold the same
+    multiset of rows (up to a 64-bit hash collision)."""
+    n, h = df.agg(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
+    ).first()
+    return f"{n}:{h}"
+
+
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
     ontology: DataFrame,
     checkpoint_root: str,
 ) -> dict[str, DataFrame]:
-    """Full checkpointed run. Returns the stage outputs keyed by name."""
+    """Full checkpointed run. Returns the stage outputs keyed by name.
+
+    A stage resumes only when its fingerprint matches the last committed
+    one. Fingerprints are content-addressed: the document stages key on the
+    documents' content hash, canonical_nodes on the ontology's, and the
+    link-dependent stages on both plus the config constants linking reads.
+    A different corpus or ontology therefore reruns exactly the stages that
+    read it, whatever its size."""
     cp = CheckpointManager(spark, checkpoint_root)
-    n_docs = documents.count()
-    fp = f"docs={n_docs}"
+    docs_fp = "docs=" + _content_key(documents, "url", "warc_ts", "lang", "html")
+    onto_fp = "onto=" + _content_key(
+        ontology, F.to_json(F.struct(*ontology.columns))
+    )
+    link_fp = (
+        f"{docs_fp}|{onto_fp}|link={config.KEEP_TOP_N_CANDIDATES},"
+        f"{config.SIMSCORE_THRESHOLD},{config.NAME_WEIGHT},{config.DEF_WEIGHT}"
+    )
 
     extracted = cp.stage(
         "extracted",
         lambda: with_extracted_text(documents).select(
             "url", "warc_ts", "lang", "extracted_text"
         ),
-        fingerprint=fp,
+        fingerprint=docs_fp,
     )
     mentions = cp.stage(
         "mentions",
         lambda: extract_mentions(
             extracted.withColumnRenamed("extracted_text", "text")
         ),
-        fingerprint=fp,
+        fingerprint=docs_fp,
     )
     links = cp.stage(
         "links",
@@ -324,26 +308,26 @@ def run_pipeline(
             ),
             ontology,
         ),
-        fingerprint=fp,
+        fingerprint=link_fp,
     )
     triples = cp.stage(
         "triples",
         lambda: assemble_triples(mentions, links),
-        fingerprint=fp,
+        fingerprint=link_fp,
         partition_by=["pred"],
     )
     rescored = cp.stage(
         "links_rescored",
         lambda: bootstrap_rescore_links(spark, links, ontology),
-        fingerprint=fp,
+        fingerprint=link_fp,
     )
     canon = cp.stage(
-        "canonical_nodes", lambda: canonicalize_classes(ontology), fingerprint=fp
+        "canonical_nodes", lambda: canonicalize_classes(ontology), fingerprint=onto_fp
     )
     edges = cp.stage(
         "edges",
         lambda: canonical_edges(triples, canon),
-        fingerprint=fp,
+        fingerprint=link_fp,
         partition_by=["pred"],
     )
     return {

@@ -1,11 +1,11 @@
-"""Iceberg-style table writer abstraction.
+"""Iceberg-style tables: partitioned parquet plus a JSON manifest.
 
-The north rule targets Iceberg node/edge tables. The sandbox has no Iceberg
-runtime jar (SURVEY.md §7.0), so the default backend is partitioned parquet
-plus a JSON manifest with Iceberg-commit-like semantics (atomic pointer to
-the current snapshot; idempotent overwrite per fingerprint). The `fmt`
-switch selects a real Iceberg catalog writer when the runtime is present —
-the calling code never changes.
+Each table is a set of parquet data directories and a manifest with
+Iceberg-commit-like semantics: an atomic pointer swap to the current
+snapshot, idempotent replay per fingerprint, optimistic concurrency under
+a commit lock, and a commit log for incremental and time-travel reads.
+There is no Iceberg runtime jar (SURVEY.md §7.0); the manifest plays the
+catalog's part.
 """
 
 from __future__ import annotations
@@ -17,23 +17,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
-        return True
-    except Exception:
-        return False
-
-
 class Warehouse:
     """warehouse_root/<table>/data/... + <table>/manifest.json"""
 
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "auto"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        if fmt == "auto":
-            fmt = "iceberg" if _iceberg_available(spark) else "parquet"
-        self.fmt = fmt
         os.makedirs(root, exist_ok=True)
 
     def _table_dir(self, table: str) -> str:
@@ -118,7 +107,7 @@ class Warehouse:
         the manifest swap is safe: the replayed write targets the same
         fingerprint-derived directory and overwrites its own half-written
         files, never duplicating committed rows. This closes the
-        parquet-backend hole where an append into a shared data/ dir became
+        hole where an append into a shared data/ dir became
         visible the moment the parquet job committed, BEFORE the fingerprint
         swap.
 
@@ -139,18 +128,7 @@ class Warehouse:
         silently dropping its committed rows. The aborted write's own
         directory never entered the manifest, so nothing leaks; the caller
         re-runs write() and the replay-dedup logic picks up from the fresh
-        manifest.
-
-        Iceberg-backend caveat: writer.append() commits to the iceberg
-        catalog IMMEDIATELY, so a crash between that commit and our
-        manifest swap leaves the fingerprint outside applied_fingerprints
-        and a replayed write would append the batch a SECOND time — the
-        per-write-directory crash-safety argument above holds only for the
-        parquet backend. Closing it needs the fingerprint stamped as an
-        iceberg snapshot property (WAP-style) and checked before appending;
-        not implementable in this sandbox (no iceberg runtime jar — see
-        _ICEBERG_AVAILABLE probe), so the gap is documented rather than
-        silently ignored."""
+        manifest."""
         import hashlib
 
         man = self.manifest(table)
@@ -184,42 +162,29 @@ class Warehouse:
             if man and man.get("fingerprint") == fingerprint:
                 return
             schema = incoming_schema
-        if self.fmt == "iceberg":
-            writer = df.writeTo(f"local.{table}")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            if mode == "append" and man:
-                writer.append()
-            else:
-                writer.createOrReplace()
-            snapshot = f"iceberg:local.{table}"
-            snapshots = [snapshot]
+        # dir name keyed by (mode, fingerprint): a crash-replay of the
+        # SAME write deterministically overwrites its own directory,
+        # while an overwrite can never silently target an append's dir
+        suffix = hashlib.md5(f"{mode}:{fingerprint}".encode()).hexdigest()[:16]
+        snapshot = os.path.join(self._table_dir(table), f"data_{suffix}")
+        if man and snapshot in self._snapshot_dirs(man):
+            # the target dir is LIVE (e.g. overwrite reusing a
+            # fingerprint that was committed earlier and appended over):
+            # mode('overwrite') would destroy committed data BEFORE the
+            # manifest swap, breaking the crash-safety invariant
+            raise ValueError(
+                f"write to '{table}' reuses fingerprint {fingerprint!r} "
+                "whose data directory is still in the live snapshot "
+                "list; pick a fresh fingerprint"
+            )
+        writer = df.write.mode("overwrite")  # a write owns its dir
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(snapshot)
+        if mode == "append" and man:
+            snapshots = self._snapshot_dirs(man) + [snapshot]
         else:
-            # dir name keyed by (mode, fingerprint): a crash-replay of the
-            # SAME write deterministically overwrites its own directory,
-            # while an overwrite can never silently target an append's dir
-            suffix = hashlib.md5(f"{mode}:{fingerprint}".encode()).hexdigest()[:16]
-            snapshot = os.path.join(self._table_dir(table), f"data_{suffix}")
-            if man and snapshot in self._snapshot_dirs(man):
-                # the target dir is LIVE (e.g. overwrite reusing a
-                # fingerprint that was committed earlier and appended over):
-                # mode('overwrite') would destroy committed data BEFORE the
-                # manifest swap, breaking the crash-safety invariant
-                raise ValueError(
-                    f"write to '{table}' reuses fingerprint {fingerprint!r} "
-                    "whose data directory is still in the live snapshot "
-                    "list; pick a fresh fingerprint"
-                )
-            writer = df.write.mode("overwrite")  # a write owns its dir
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(snapshot)
-            if mode == "append" and man:
-                snapshots = self._snapshot_dirs(man) + [snapshot]
-            else:
-                snapshots = [snapshot]
+            snapshots = [snapshot]
         if mode == "append" and man:
             applied.add(fingerprint)
             # commit log for incremental reads: ordered (fingerprint, dirs)
@@ -241,35 +206,27 @@ class Warehouse:
             if (mode == "append" and man)
             else None
         )
-        # concurrency guard (parquet backend; see docstring for the iceberg
-        # caveat): the re-read + pointer swap happen under an exclusive
-        # commit lock — a plain check-then-replace would leave a window
-        # where two writers both pass the check before either swaps, and
-        # the second swap would drop the first append's directory
+        # concurrency guard: the re-read + pointer swap happen under an
+        # exclusive commit lock — a plain check-then-replace would leave a
+        # window where two writers both pass the check before either swaps,
+        # and the second swap would drop the first append's directory
         os.makedirs(self._table_dir(table), exist_ok=True)
-        if self.fmt != "iceberg":
-            with self._commit_lock(table):
-                current = self.manifest(table)
-                if (current is None) != (man is None) or (
-                    current is not None
-                    and man is not None
-                    and (
-                        current.get("fingerprint") != man.get("fingerprint")
-                        or self._snapshot_dirs(current)
-                        != self._snapshot_dirs(man)
-                    )
-                ):
-                    raise RuntimeError(
-                        f"concurrent commit to '{table}' during write; "
-                        "rerun write() — its replay dedup starts from the "
-                        "fresh manifest"
-                    )
-                self._swap_manifest(
-                    table, snapshot, snapshots, fingerprint, applied,
-                    partition_by, commits, schema=schema,
-                    log_base_dirs=log_base,
+        with self._commit_lock(table):
+            current = self.manifest(table)
+            if (current is None) != (man is None) or (
+                current is not None
+                and man is not None
+                and (
+                    current.get("fingerprint") != man.get("fingerprint")
+                    or self._snapshot_dirs(current)
+                    != self._snapshot_dirs(man)
                 )
-        else:
+            ):
+                raise RuntimeError(
+                    f"concurrent commit to '{table}' during write; "
+                    "rerun write() — its replay dedup starts from the "
+                    "fresh manifest"
+                )
             self._swap_manifest(
                 table, snapshot, snapshots, fingerprint, applied,
                 partition_by, commits, schema=schema,
@@ -285,7 +242,6 @@ class Warehouse:
             json.dump(
                 {
                     "table": table,
-                    "format": self.fmt,
                     "snapshot": snapshot,
                     "snapshots": snapshots,
                     "fingerprint": fingerprint,
@@ -368,8 +324,6 @@ class Warehouse:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if man["format"] == "iceberg":
-            return self.spark.read.table(man["snapshot"].split(":", 1)[1])
         return self._project_schema(
             self._read_dirs(self._snapshot_dirs(man)), man.get("schema")
         )
@@ -415,9 +369,7 @@ class Warehouse:
         fingerprint."""
         if since_fingerprint is None:
             return self.read(table)
-        commits, idx = self._commit_index(
-            table, since_fingerprint, op="incremental read"
-        )
+        commits, idx = self._commit_index(table, since_fingerprint)
         dirs = [d for c in commits[idx + 1 :] for d in c["dirs"]]
         if not dirs:
             return self.read(table).limit(0)  # caught up: empty, same schema
@@ -429,23 +381,16 @@ class Warehouse:
             self._read_dirs(dirs), man.get("schema") if man else None
         )
 
-    def _commit_index(
-        self, table: str, fingerprint: str, *, op: str
-    ) -> tuple[list, int]:
+    def _commit_index(self, table: str, fingerprint: str) -> tuple[list, int]:
         """Shared commit-log lookup for the two log-positional readers
-        (read_incremental / read_at): load the manifest, guard the
-        iceberg-backend gap, and locate `fingerprint` in the ordered
-        commit log. Raises ValueError when the fingerprint is absent —
-        the history was reset by an overwrite/compaction, or predates
-        the log — the Iceberg expired-snapshot contract."""
+        (read_incremental / read_at): load the manifest and locate
+        `fingerprint` in the ordered commit log. Raises ValueError when
+        the fingerprint is absent — the history was reset by an
+        overwrite/compaction, or predates the log — the Iceberg
+        expired-snapshot contract."""
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if man["format"] == "iceberg":
-            raise NotImplementedError(
-                f"iceberg {op} goes through the catalog (snapshot-range "
-                "scan / VERSION AS OF); no iceberg runtime in this sandbox"
-            )
         commits = man.get("commits") or []
         idx = [
             i
@@ -487,11 +432,6 @@ class Warehouse:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if man["format"] == "iceberg":
-            raise NotImplementedError(
-                "iceberg backend GC = CALL remove_orphan_files; no iceberg "
-                "runtime in this sandbox"
-            )
         tdir = self._table_dir(table)
         removed = kept_young = 0
         with self._commit_lock(table):
@@ -547,11 +487,6 @@ class Warehouse:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if man["format"] == "iceberg":
-            raise NotImplementedError(
-                "iceberg snapshot expiry = CALL expire_snapshots; no "
-                "iceberg runtime in this sandbox"
-            )
         with self._commit_lock(table):
             man = self.manifest(table)  # re-read under the lock
             commits = man.get("commits") or []
@@ -591,7 +526,7 @@ class Warehouse:
         History expired by expire_snapshots() is prepended as the
         log_base_dirs base, so kept fingerprints still see the full
         table as of their commit."""
-        commits, idx = self._commit_index(table, fingerprint, op="time travel")
+        commits, idx = self._commit_index(table, fingerprint)
         man = self.manifest(table) or {}
         base = list(man.get("log_base_dirs") or [])
         dirs = base + [d for c in commits[: idx + 1] for d in c["dirs"]]
@@ -681,11 +616,6 @@ class Warehouse:
                 raise ValueError(f"merge key {k!r} missing from updates")
         if delete_col is not None and delete_col not in updates.columns:
             raise ValueError(f"delete_col {delete_col!r} missing from updates")
-        if self.fmt == "iceberg":
-            raise NotImplementedError(
-                "iceberg-backend merge needs the runtime jar's MERGE INTO; "
-                "see _iceberg_available"
-            )
         man0 = self.manifest(table)
         applied0 = (
             set(man0.get("applied_fingerprints", [man0["fingerprint"]]))
@@ -790,11 +720,6 @@ class Warehouse:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if man["format"] == "iceberg":
-            raise NotImplementedError(
-                "iceberg backend compaction = CALL rewrite_data_files; "
-                "no iceberg runtime in this sandbox"
-            )
         snaps = self._snapshot_dirs(man)
         files = []
         for snap in snaps:

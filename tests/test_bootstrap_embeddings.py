@@ -104,7 +104,7 @@ def test_structural_token_expansion(spark):
     """Reference parity (candidate_selector.py:80-103): all_tokens =
     own(alias+def) + parent(ALIAS) + child(ALIAS) — relatives contribute
     alias tokens only, never their definition tokens."""
-    from pathhier_spark.plans.pipeline import alias_token_table
+    from pathhier_spark.operators.linking import alias_token_table
 
     c = corpus_mod.generate(n_classes=30, n_docs=5, seed=3)
     _, onto, *_ = corpus_mod.to_spark(spark, c)

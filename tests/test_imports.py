@@ -1,9 +1,12 @@
-"""Every ``from pathhier_spark... import X`` in the repo resolves.
+"""Every ``from pathhier_spark... import X`` and every ``config.NAME`` in
+the repo resolves.
 
-Imports inside functions only run when the function does, so a deleted
-module or name behind a lazy import would otherwise surface in production
-first. This parses each source file with ``ast`` and checks every such
-import, at module level or nested, against the module it names.
+Imports inside functions only run when the function does, and so does a
+``config.NAME`` read in a function body, so a deleted module, name or
+constant would otherwise surface in production first. This parses each
+source file with ``ast`` and checks every such import, at module level or
+nested, against the module it names, and every attribute read of the
+``pathhier_spark.config`` module against that module.
 """
 
 import ast
@@ -61,3 +64,39 @@ def test_package_imports_resolve():
     assert (
         stream, "pathhier_spark.plans.pipeline", "run_pipeline_incremental"
     ) in checked
+
+
+def _config_reads(path):
+    """(line, NAME) for every ``config.NAME`` in a file that binds
+    ``config`` by ``from pathhier_spark import config``."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    bound = {
+        a.asname or a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.module == "pathhier_spark"
+        for a in node.names
+        if a.name == "config"
+    }
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in bound
+        ):
+            yield node.lineno, node.attr
+
+
+def test_config_attributes_resolve():
+    config = importlib.import_module("pathhier_spark.config")
+    checked, dangling = set(), []
+    for path in _sources():
+        rel = os.path.relpath(path, ROOT)
+        for line, name in _config_reads(path):
+            checked.add((rel, name))
+            if not hasattr(config, name):
+                dangling.append(f"{rel}:{line}: config.{name}")
+    assert not dangling, "\n".join(dangling)
+    # the scan reaches reads inside function bodies
+    pipeline = os.path.join("pathhier_spark", "plans", "pipeline.py")
+    assert (pipeline, "SIMSCORE_THRESHOLD") in checked

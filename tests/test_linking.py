@@ -31,7 +31,8 @@ def _oracle_candidates(source, target, top_n=20):
     out = {}
     for sid, toks in source.items():
         scores = defaultdict(float)
-        for t in set(toks):
+        # first-occurrence order: the order Spark's per-pair sum adds them
+        for t in dict.fromkeys(toks):
             for tid in postings.get(t, ()):
                 scores[tid] += idf[t]
         ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:top_n]
@@ -176,17 +177,89 @@ def test_entity_token_table(spark):
     assert got["tokens"] == ["mapk", "signaling", "a", "cascade", "events"]
 
 
-def test_salted_candidates_equal_unsalted(spark):
-    from pathhier_spark.operators.linking import salted_candidate_pairs
+def _oracle_link(mentions, ontology):
+    """link_mentions semantics in pure Python: J3 token sets (own alias +
+    definition tokens, plus the alias tokens of parents and children),
+    IDF candidates top-20 by (score desc, class_id), max alias/definition
+    jaccard fused 0.75/0.25, threshold 0.25, top-1 by (score desc,
+    class_id)."""
+    tok = oracle.tokenize_string
 
-    plain = candidate_pairs(_tok_df(spark, SOURCE), _tok_df(spark, TARGET))
-    salted = salted_candidate_pairs(
-        _tok_df(spark, SOURCE), _tok_df(spark, TARGET),
-        hot_df_threshold=1, salt_buckets=4,  # force salting of every token
+    def toks(strings):
+        return {t for s in strings for t in tok(s)}
+
+    classes = {c["class_id"]: c for c in ontology}
+    expanded = {cid: toks(c["aliases"]) | toks(c["definition"]) for cid, c in classes.items()}
+    for cid, c in classes.items():
+        for parent in c["subClassOf"] + c["part_of"]:
+            if parent in classes:
+                expanded[cid] |= toks(classes[parent]["aliases"])
+                expanded[parent] |= toks(c["aliases"])
+    source = {m: list(tok(m)) for m in mentions}
+    cands = _oracle_candidates(source, expanded, top_n=config.KEEP_TOP_N_CANDIDATES)
+    out = {}
+    for m, ranked in cands.items():
+        m_toks = set(tok(m))
+        scored = []
+        for cid, _ in ranked:
+            c = classes[cid]
+            name_s = max(oracle.jaccard(m_toks, set(tok(a))) for a in c["aliases"])
+            def_s = max(
+                (oracle.jaccard(m_toks, set(tok(d))) for d in c["definition"]),
+                default=0.0,
+            )
+            score = config.NAME_WEIGHT * name_s + config.DEF_WEIGHT * def_s
+            if score >= config.SIMSCORE_THRESHOLD:
+                scored.append((-score, cid))
+        if scored:
+            neg, cid = min(scored)
+            out[m] = (cid, -neg)
+    return out
+
+
+def test_link_mentions_vs_oracle(spark):
+    """The one linking path, row for row, on a seeded random ontology whose
+    small vocabulary makes shared tokens, candidate-score ties and
+    channel-score ties common."""
+    import random
+
+    from pathhier_spark.plans.pipeline import link_mentions
+    from pathhier_spark.sources.corpus import ONTOLOGY_SCHEMA
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(14)] + ["the", "of", "pathway"]
+
+    def phrase(lo=1, hi=3):
+        return " ".join(rng.choice(vocab) for _ in range(rng.randint(lo, hi)))
+
+    ids = [f"C{i:03d}" for i in range(60)]
+    ontology = []
+    for i, cid in enumerate(ids):
+        earlier = ids[:i]
+        ontology.append({
+            "class_id": cid,
+            "name": phrase(),
+            "aliases": [phrase() for _ in range(rng.randint(1, 3))],
+            "synonyms": [],
+            "definition": [phrase(2, 6) for _ in range(rng.randint(0, 2))],
+            "subClassOf": rng.sample(earlier, min(len(earlier), rng.randint(0, 2))),
+            "part_of": rng.sample(earlier, min(len(earlier), rng.randint(0, 1))),
+            "instances": [],
+        })
+    mentions = sorted({phrase() for _ in range(150)} | {"the of", "unseen token"})
+    onto = spark.createDataFrame(
+        [tuple(c.values()) for c in ontology], ONTOLOGY_SCHEMA
     )
-    a = {(r["s_id"], r["t_id"]): (round(r["cand_score"], 9), r["rank"]) for r in plain.collect()}
-    b = {(r["s_id"], r["t_id"]): (round(r["cand_score"], 9), r["rank"]) for r in salted.collect()}
-    assert a == b
+    m_df = spark.createDataFrame([(m,) for m in mentions], "mention string")
+
+    got = {
+        r["mention"]: (r["class_id"], r["link_score"])
+        for r in link_mentions(m_df, onto).collect()
+    }
+    want = _oracle_link(mentions, ontology)
+    assert {m: c for m, (c, _) in got.items()} == {m: c for m, (c, _) in want.items()}
+    for m, (_, score) in want.items():
+        assert got[m][1] == pytest.approx(score, abs=1e-9), m
 
 
 # --------------------------- dictionary_augment ---------------------------

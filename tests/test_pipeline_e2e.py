@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pathhier_spark.plans.checkpoint import CheckpointManager
 from pathhier_spark.plans.pipeline import run_pipeline, triple_precision_recall
 from pathhier_spark.sources import corpus as corpus_mod
 
@@ -114,64 +115,99 @@ def test_crash_resume_recomputes_only_missing_stage(spark, corpus, tmp_path_fact
     assert h(out2["edges"]) == edges_hash
 
 
+def test_resume_keys_on_input_content(spark, tmp_path_factory):
+    """Stage fingerprints hash the inputs' content, not their size: a crawl
+    of the same size with one page edited reruns every document-dependent
+    stage and matches a fresh-root run; an alias edit reruns only the
+    stages that read the ontology."""
+    c = corpus_mod.generate(n_classes=40, n_docs=40, seed=11)
+    docs, onto, *_ = corpus_mod.to_spark(spark, c)
+    root = str(tmp_path_factory.mktemp("content"))
+    cols = ["url", "sent_no", "subj_id", "pred", "obj_id"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    def rerun(d, o):
+        n_before = len(CheckpointManager(spark, root).lineage())
+        out = run_pipeline(spark, d, o, root)
+        new = [r["stage"] for r in out["lineage"].collect()[n_before:]]
+        return out, set(new)
+
+    base = rows(run_pipeline(spark, docs, onto, root)["triples"])
+
+    # same page count, one page's html replaced by another page's
+    first, other = docs.orderBy("url").limit(2).collect()
+    edited = docs.withColumn(
+        "html",
+        F.when(F.col("url") == first["url"], F.lit(other["html"])).otherwise(
+            F.col("html")
+        ),
+    )
+    out, new = rerun(edited, onto)
+    assert new == {"extracted", "mentions", "links", "triples",
+                   "links_rescored", "edges"}
+    got = rows(out["triples"])
+    assert got != base
+    fresh = run_pipeline(spark, edited, onto, str(tmp_path_factory.mktemp("fresh")))
+    assert got == rows(fresh["triples"])
+
+    # one alias edited: the document stages resume, the rest rerun
+    cid = onto.orderBy("class_id").first()["class_id"]
+    renamed = onto.withColumn(
+        "aliases",
+        F.when(
+            F.col("class_id") == cid,
+            F.transform(
+                "aliases",
+                lambda a, i: F.when(i == 0, F.concat(a, F.lit(" renamed"))).otherwise(a),
+            ),
+        ).otherwise(F.col("aliases")),
+    )
+    _, new = rerun(edited, renamed)
+    assert new == {"links", "triples", "links_rescored", "canonical_nodes", "edges"}
+
+
 def test_structural_tokens_widen_candidate_recall(spark):
-    """J3 wired into the default link path (candidate_selector.py:80-107):
-    a class crowded out of the candidate top-n by its own tokens alone is
-    linked once its parent's tokens join its candidate-generation set."""
-    from pathhier_spark.plans.pipeline import link_mentions
+    """J3 wired into the link path (candidate_selector.py:80-107): a class
+    crowded out of the candidate top-n by its own tokens alone is linked
+    once its parent's tokens join its candidate-generation set."""
+    from pathhier_spark import config
+    from pathhier_spark.functions.text import tokenize
+    from pathhier_spark.operators.linking import candidate_pairs
+    from pathhier_spark.plans.pipeline import link_mentions, ontology_token_table
     from pathhier_spark.sources.corpus import ONTOLOGY_SCHEMA
 
     def klass(cid, aliases, parents=()):
         return (cid, cid, aliases, [], [], list(parents), [], [])
 
+    n_decoys = config.KEEP_TOP_N_CANDIDATES
     onto = spark.createDataFrame(
         [
             klass("A_child", ["greeting"], ["P_parent"]),
             klass("P_parent", ["uniquetok"]),
-            klass("D_decoy", ["uniquetok filler"]),
-            klass("D_g1", ["greeting one"]),
-            klass("D_g2", ["greeting two"]),
+            # enough uniquetok decoys to fill the top-n without A_child ...
+            *[klass(f"D_u{i:02d}", [f"uniquetok filler{i}"]) for i in range(n_decoys)],
+            # ... and enough greeting classes that idf(uniquetok) > idf(greeting)
+            *[klass(f"D_g{i:02d}", [f"greeting word{i}"]) for i in range(n_decoys + 5)],
         ],
         ONTOLOGY_SCHEMA,
     )
     mentions = spark.createDataFrame([("uniquetok greeting",)], "mention string")
 
-    def link(structural):
-        rows = link_mentions(
-            mentions, onto, top_candidates=1, structural_tokens=structural
-        ).collect()
-        return {r["mention"]: r["class_id"] for r in rows}
-
-    # without J3 the mention's single greeting-token candidate score loses
-    # the top-1 cut to the uniquetok decoy; the true class never gets scored
-    assert link(False).get("uniquetok greeting") != "A_child"
-    # with parent tokens folded in, A_child tops candidates and links
-    assert link(True).get("uniquetok greeting") == "A_child"
-
-
-def test_link_mentions_nonbroadcast_regime_identical(spark, corpus):
-    """broadcast_ontology=False (salted shuffle join for dictionaries too
-    large to broadcast) must produce the same links as the broadcast path."""
-    from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
-    from pathhier_spark.plans.pipeline import link_mentions
-
-    docs, onto, *_ = corpus
-    ext = with_extracted_text(docs).select("url", F.col("extracted_text").alias("text"))
-    m = extract_mentions(ext)
-    mentions = (
-        m.select(F.col("subj_mention").alias("mention"))
-        .union(m.select(F.col("obj_mention").alias("mention")))
+    # without J3 the mention's greeting-token candidate score loses the
+    # top-n cut to the uniquetok classes; the true class never gets scored
+    plain = candidate_pairs(
+        mentions.select(
+            F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
+        ),
+        ontology_token_table(onto),
     )
-
-    def rows(broadcast):
-        return {
-            (r["mention"], r["class_id"], round(r["link_score"], 9))
-            for r in link_mentions(
-                mentions, onto, broadcast_ontology=broadcast
-            ).collect()
-        }
-
-    assert rows(True) == rows(False)
+    assert plain.count() == config.KEEP_TOP_N_CANDIDATES
+    assert plain.filter(F.col("t_id") == "A_child").count() == 0
+    # with parent tokens folded in, A_child tops candidates and links
+    links = {r["mention"]: r["class_id"] for r in link_mentions(mentions, onto).collect()}
+    assert links.get("uniquetok greeting") == "A_child"
 
 
 # --------------------------- incremental ingest ---------------------------

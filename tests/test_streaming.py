@@ -204,7 +204,7 @@ def test_stream_to_warehouse_exactly_once(spark, tmp_path):
 
     input_dir = tmp_path / "in"
     input_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
     schema = "url string, n long"
 
@@ -334,7 +334,7 @@ def test_streaming_batch_funnel_parity_via_warehouse(spark, tmp_path):
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(input_dir)
 
     # streaming path: funnel -> exactly-once warehouse commits -> batch read
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     out = stream_training_corpus(stream_documents(spark, input_dir))
     q = stream_to_warehouse(
         out.select("url", "warc_ts", "text", "quality_score", "lang_pred"),
@@ -376,7 +376,7 @@ def test_stream_to_warehouse_incremental_consumer(spark, tmp_path):
 
     input_dir = tmp_path / "in"
     input_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
     schema = "url string, n long"
 
@@ -447,7 +447,7 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(input_dir)
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(input_dir)
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force >= 2 micro-batches
@@ -633,7 +633,7 @@ def test_stream_countmin_parity_and_heavy_hitters(spark, tmp_path):
     spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(input_dir)
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(input_dir)
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     toks = lambda df: df.select(  # noqa: E731
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     )
@@ -710,7 +710,7 @@ def test_streaming_batch_rate_anomaly_parity_via_warehouse(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(input_dir))
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     out = streaming_daily_counts(stream, watermark="1 day")
     q = stream_to_warehouse(
         out, wh, "daily", checkpoint_dir=str(tmp_path / "ckpt")
@@ -859,7 +859,7 @@ def test_streaming_batch_cusum_parity_via_warehouse(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(input_dir))
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     out = streaming_daily_counts(stream, watermark="1 day")
     q = stream_to_warehouse(
         out, wh, "daily", checkpoint_dir=str(tmp_path / "ckpt")

@@ -11,7 +11,6 @@ from pathhier_spark.sources.warehouse import Warehouse
 
 def test_warehouse_commit_and_idempotence(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    assert wh.fmt == "parquet"  # no iceberg jar in sandbox
     df = spark.createDataFrame(
         [(1, "participant"), (2, "component"), (3, "participant")],
         "id long, pred string",
@@ -82,7 +81,7 @@ def test_compaction(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(10000).selectExpr("id", "id % 7 AS k")
     wh.write(df.repartition(64), "tiny", fingerprint="v1")
     old_snap = wh.manifest("tiny")["snapshot"]
@@ -104,7 +103,7 @@ def test_compaction(spark, tmp_path):
 def test_compaction_partitioned(spark, tmp_path):
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh2"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh2"))
     df = spark.range(5000).selectExpr("id", "id % 3 AS part")
     wh.write(df.repartition(32), "ptab", partition_by=["part"], fingerprint="v1")
     stats = wh.compact("ptab")
@@ -125,7 +124,7 @@ def test_append_fingerprint_discipline(spark, tmp_path):
 
     import pytest as _pytest
 
-    wh = Warehouse(spark, str(tmp_path / "wh3"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh3"))
     df1 = spark.createDataFrame([(1,), (2,)], "id long")
     df2 = spark.createDataFrame([(3,)], "id long")
 
@@ -165,7 +164,7 @@ def test_compaction_conflict_detection(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse as W
 
-    wh = W(spark, str(tmp_path / "wh4"), fmt="parquet")
+    wh = W(spark, str(tmp_path / "wh4"))
     df = spark.range(100).selectExpr("id")
     wh.write(df.repartition(8), "t", fingerprint="v1")
 
@@ -200,7 +199,7 @@ def test_compaction_size_aware_salting(spark, tmp_path):
     must not be over-split."""
     import os as _os
 
-    wh = Warehouse(spark, str(tmp_path / "wh5"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh5"))
     # value 0: 95k rows; values 1..5: 1k each
     df = spark.range(100000).selectExpr(
         "id", "CASE WHEN id < 95000 THEN 0 ELSE 1 + id % 5 END AS part"
@@ -228,7 +227,7 @@ def test_partitioned_append_read_and_compact(spark, tmp_path):
     """Appends to a PARTITIONED table: the multi-snapshot read unions
     per-directory (one multi-root read refuses partitioned layouts), and
     compaction collapses the snapshots back to one partitioned dir."""
-    wh = Warehouse(spark, str(tmp_path / "wh6"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh6"))
     df1 = spark.range(10).selectExpr("id", "id % 2 AS part")
     df2 = spark.range(10, 15).selectExpr("id", "id % 2 AS part")
     wh.write(df1, "t", partition_by=["part"], fingerprint="base")
@@ -248,7 +247,7 @@ def test_partitioned_append_read_and_compact(spark, tmp_path):
 def test_compaction_keeps_null_partition_rows(spark, tmp_path):
     """Rows with a NULL partition value must survive compaction (the salt
     join is NULL-safe; a plain equi-join would silently drop them)."""
-    wh = Warehouse(spark, str(tmp_path / "wh7"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh7"))
     df = spark.range(100).selectExpr(
         "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE id % 3 END AS part"
     )
@@ -266,7 +265,7 @@ def test_overwrite_cannot_destroy_live_snapshot_dir(spark, tmp_path):
     before the manifest swap."""
     import pytest as _pytest
 
-    wh = Warehouse(spark, str(tmp_path / "wh8"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh8"))
     df = spark.range(10).selectExpr("id")
     wh.write(df, "t", fingerprint="base")
     wh.write(df, "t", mode="append", fingerprint="b1")
@@ -288,7 +287,7 @@ def test_write_write_conflict_detected(spark, tmp_path, monkeypatch):
     manifest that changed after the initial read."""
     import pytest as _pytest
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(5).withColumnRenamed("id", "v")
     wh.write(df, "t", fingerprint="base")
 
@@ -373,7 +372,7 @@ def test_commit_lock_blocks_and_breaks_stale(spark, tmp_path):
     import os
     import pytest as _pytest
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(3).withColumnRenamed("id", "v")
     wh.write(df, "t", fingerprint="base")
     lock = os.path.join(str(tmp_path / "wh"), "t", "manifest.lock")
@@ -444,7 +443,7 @@ def test_compact_zorder_prunes_both_dimensions(spark, tmp_path):
                 spans.append(((hi_x - lo_x + 1) * (hi_y - lo_y + 1)))
         return spans
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(df.repartition(16), "lin", fingerprint="v1")
     wh.compact("lin", target_file_bytes=64 * 1024, sort_within_by=["x"])
     lin_spans = ranges(wh.manifest("lin")["snapshot"])
@@ -475,7 +474,7 @@ def test_stale_lock_break_two_writers_single_winner(spark, tmp_path):
     import threading
     import time
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(3).withColumnRenamed("id", "v")
     wh.write(df, "t", fingerprint="base")
     lock = os.path.join(str(tmp_path / "wh"), "t", "manifest.lock")
@@ -522,7 +521,7 @@ def test_compact_rejects_sort_within_and_zorder_together(spark, tmp_path):
     the z-key sort silently win; now it is an explicit ValueError."""
     import pytest as _pytest
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(10).select(
         F.col("id").alias("a"), (F.col("id") * 2).alias("b")
     )
@@ -538,7 +537,7 @@ def test_read_incremental_delta_feed(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     base = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     wh.write(base, "t", fingerprint="base")
     wh.write(
@@ -573,7 +572,7 @@ def test_read_incremental_across_compaction(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(
         spark.createDataFrame([(1, "a")], "id long, v string"),
         "t", fingerprint="base",
@@ -607,7 +606,7 @@ def test_read_at_time_travel(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(
         spark.createDataFrame([(1, "a")], "id long, v string"),
         "t", fingerprint="base",
@@ -642,7 +641,7 @@ def test_vacuum_removes_only_aged_orphans(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df1 = spark.range(10).withColumnRenamed("id", "v")
     df2 = spark.range(10, 25).withColumnRenamed("id", "v")
     wh.write(df1, "t", mode="overwrite", fingerprint="v1")
@@ -686,7 +685,7 @@ def test_vacuum_missing_table_raises(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     with _pytest.raises(FileNotFoundError):
         wh.vacuum("nope")
 
@@ -877,7 +876,7 @@ def test_snapshot_diff_multiset_and_keyed(spark, tmp_path):
     ]
 
     # warehouse.diff across the append-only commit log
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(a, "t", mode="append", fingerprint="c1")
     wh.write(
         spark.createDataFrame([(4, "d")], "id long, v string"),
@@ -908,7 +907,7 @@ def test_snapshot_diff_detects_null_position_swap(spark):
 def test_schema_append_exact_match_ok(spark, tmp_path):
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame([(1, "a")], "id long, name string")
     wh.write(df, "t", fingerprint="v1")
     wh.write(
@@ -925,7 +924,7 @@ def test_schema_append_new_column_refused_then_evolves(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     wide = spark.createDataFrame(
@@ -950,7 +949,7 @@ def test_schema_append_missing_column_policy(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     narrow = spark.createDataFrame([(2,)], "id long")
@@ -967,7 +966,7 @@ def test_schema_type_change_always_refused(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     retyped = spark.createDataFrame([("x", "b")], "id string, name string")
@@ -979,7 +978,7 @@ def test_schema_type_change_always_refused(spark, tmp_path):
 def test_schema_overwrite_resets(spark, tmp_path):
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     wh.write(spark.createDataFrame([(9,)], "other long"), "t",
@@ -991,7 +990,7 @@ def test_schema_overwrite_resets(spark, tmp_path):
 def test_schema_survives_compaction(spark, tmp_path):
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     wh.write(spark.createDataFrame([(2, "b", "en")],
@@ -1010,7 +1009,7 @@ def test_incremental_read_projects_current_schema(spark, tmp_path):
     consumer's frame shape batch to batch."""
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     wh.write(spark.createDataFrame([(2, "b", "en")],
@@ -1030,7 +1029,7 @@ def test_stream_sink_passes_evolution_flags(spark, tmp_path):
     the StreamingQuery with no recourse."""
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write(spark.createDataFrame([(1, "a")], "id long, name string"),
              "t", fingerprint="v1")
     # simulate the sink's _commit with the flags threaded through
@@ -1053,7 +1052,7 @@ def test_expire_snapshots_bounds_log_keeps_data(spark, tmp_path):
 
     from pathhier_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "whx"), fmt="parquet")
+    wh = Warehouse(spark, str(tmp_path / "whx"))
     for i, fp in enumerate(["f0", "f1", "f2", "f3"]):
         wh.write(
             spark.createDataFrame([(i, f"v{i}")], "id long, v string"),
