@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pathhier_spark import config
-from pathhier_spark.operators.linking import (
-    FEATURE_COLS,
-    alias_token_table,
-    candidate_pairs,
-    lr_score,
-)
+from pathhier_spark.operators.linking import FEATURE_COLS, OntologyIndex, lr_score
 
 
 @dataclass
@@ -119,103 +114,61 @@ def bootstrap_seed_labels(
         alias after normalize_string (the analog of PW synonym-annotation
         pairs, _extract_positive_mappings:178-210);
       * hard negatives — for each positive mention, candidate-selector ranks
-        4..2+n_hard, i.e. n_hard-1 pairs: the reference slices
-        select(pw_id)[3:2+num_neg], a half-open Python slice that skips the
-        top 3 AND yields one FEWER than num_neg — reproduced exactly
-        (ADVICE r2: the previous rank <= 3+n_hard took n_hard items);
-        excludes positive pairs;
+        4..2+n_hard over the alias-only postings, i.e. n_hard-1 pairs: the
+        reference slices select(pw_id)[3:2+num_neg], a half-open Python
+        slice that skips the top 3 AND yields one FEWER than num_neg —
+        reproduced exactly; excludes positive pairs;
       * easy negatives — n_easy deterministic pseudo-random classes per
         positive mention (seeded stand-in for the reference's unseeded
-        random.sample, SURVEY.md §7.3), excluding positives and candidates;
-        the over-draw buffer is sized from each mention's ACTUAL exclusion
-        count, so exclusion-heavy mentions cannot undershoot n_easy.
+        random.sample, SURVEY.md §7.3): the first n_easy classes in
+        xxhash64(mention, class_id, seed) order that are neither positives
+        nor candidates of ranks 1..2+n_hard.
 
-    All sets are bounded by the ontology side (positives <= aliases), so the
-    seed table stays small no matter how large the mention corpus is.
-    Output: (mention, class_id, label INT, provenance STRING)."""
-    from pathhier_spark.functions.text import normalize_string, tokenize
-
-    aliases = ontology.select(
-        F.col("class_id"), F.explode("aliases").alias("alias")
-    ).select("class_id", normalize_string(F.col("alias")).alias("norm_alias"))
-    m = mentions.select(
-        F.col("mention"), normalize_string(F.col("mention")).alias("norm_m")
-    ).distinct()
-    positives = (
-        m.join(F.broadcast(aliases), m["norm_m"] == aliases["norm_alias"])
-        .select("mention", "class_id")
-        .distinct()
-    )
-    pos_mentions = positives.select("mention").distinct()
-
-    m_tokens = pos_mentions.select(
-        F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
-    )
-    cands = candidate_pairs(
-        m_tokens, alias_token_table(ontology), top_n=2 + n_hard
-    ).select(
-        F.col("s_id").alias("mention"), F.col("t_id").alias("class_id"), "rank"
-    )
-    # reference slice [3:2+num_neg]: ranks 4..2+n_hard (n_hard-1 items)
-    hard = (
-        cands.filter((F.col("rank") > 3) & (F.col("rank") <= 2 + n_hard))
-        .join(positives, ["mention", "class_id"], "left_anti")
-        .select("mention", "class_id")
+    Positives and candidate ranks come from one probe of the compiled
+    ontology (OntologyIndex.alias_matches); the easy-negative draw is a
+    Spark step over the positive mentions. All sets are bounded by the
+    ontology side (positives <= aliases), so the seed table stays small no
+    matter how large the mention corpus is. Output: (mention, class_id,
+    label INT, provenance STRING)."""
+    matches = OntologyIndex.compile(ontology).alias_matches(mentions, 2 + n_hard)
+    # reference slice [3:2+num_neg]: ranks 4..2+n_hard
+    hard = F.filter(
+        F.slice("ranked", 4, max(n_hard - 1, 0)),
+        lambda c: ~F.array_contains("positives", c),
     )
 
-    classes = ontology.select("class_id")
+    def pairs(classes, label: int, provenance: str):
+        return F.transform(
+            classes,
+            lambda c: F.struct(
+                c.alias("class_id"),
+                F.lit(label).alias("label"),
+                F.lit(provenance).alias("provenance"),
+            ),
+        )
+
+    labeled = matches.select(
+        "mention",
+        F.explode(
+            F.concat(pairs("positives", 1, "seed_pos"), pairs(hard, 0, "seed_hardneg"))
+        ).alias("p"),
+    ).select("mention", "p.*")
     hw = Window.partitionBy("mention").orderBy(
         F.xxhash64("mention", "class_id", F.lit(seed)), F.col("class_id")
     )
-    # over-draw by each mention's exact exclusion count, THEN exclude
-    # positives/candidates, THEN take n_easy — an excluded pick is replaced
-    # by the next hash-ranked class (the reference's
-    # random.sample-with-exclusion semantics); drawing n_easy + n_excluded
-    # guarantees n_easy survivors whenever the ontology has that many
-    # eligible classes (a fixed constant buffer could undershoot for
-    # exclusion-heavy mentions)
-    excl_counts = (
-        positives.select("mention", "class_id")
-        .union(cands.select("mention", "class_id"))
-        .distinct()
-        .groupBy("mention")
-        .agg(F.count(F.lit(1)).alias("n_excl"))
-    )
-    # constant pre-bound first (max over mentions, one tiny bounded agg):
-    # a CONSTANT rank filter keeps Spark's WindowGroupLimit pushdown (the
-    # crossJoin never materializes more than the bound per mention map-side);
-    # the per-mention column filter then trims to the exact buffer
-    max_excl = excl_counts.agg(F.max("n_excl")).collect()[0][0] or 0
-    drawn = (
-        pos_mentions.join(F.broadcast(excl_counts), "mention", "left")
-        .select("mention", F.coalesce("n_excl", F.lit(0)).alias("n_excl"))
-        .crossJoin(F.broadcast(classes))
-        .withColumn("hr", F.row_number().over(hw))
-        .filter(F.col("hr") <= n_easy + max_excl)
-        .filter(F.col("hr") <= F.lit(n_easy) + F.col("n_excl"))
-        .join(positives, ["mention", "class_id"], "left_anti")
-        .join(cands.select("mention", "class_id"), ["mention", "class_id"], "left_anti")
-    )
-    rw = Window.partitionBy("mention").orderBy("hr")
+    # a constant rank filter lets Spark cut each mention's rows map-side
+    # (WindowGroupLimit) before the window's shuffle
     easy = (
-        drawn.withColumn("rr", F.row_number().over(rw))
+        matches.crossJoin(F.broadcast(ontology.select("class_id")))
+        .filter(~F.array_contains(F.concat("positives", "ranked"), F.col("class_id")))
+        .withColumn("rr", F.row_number().over(hw))
         .filter(F.col("rr") <= n_easy)
-        .select("mention", "class_id")
-    )
-    return (
-        positives.select(
-            "mention", "class_id", F.lit(1).alias("label"),
-            F.lit("seed_pos").alias("provenance"),
-        )
-        .union(hard.select(
-            "mention", "class_id", F.lit(0).alias("label"),
-            F.lit("seed_hardneg").alias("provenance"),
-        ))
-        .union(easy.select(
+        .select(
             "mention", "class_id", F.lit(0).alias("label"),
             F.lit("seed_easyneg").alias("provenance"),
-        ))
+        )
     )
+    return labeled.union(easy)
 
 
 def bootstrap_loop(

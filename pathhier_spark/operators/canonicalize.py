@@ -22,9 +22,9 @@ Skew handling:
     otherwise grow exponentially in Catalyst.
 
 Ontology-sized graphs skip the distributed rounds: union_find_labels is the
-reference's own driver-side union-find, used by the pipeline's
-canonicalize_classes, where each star round would be a Spark job over a few
-hundred rows.
+reference's own driver-side union-find, which canonical_labels runs for the
+pipeline's canonical map, where each star round would be a Spark job over a
+few hundred rows.
 """
 
 from __future__ import annotations
@@ -210,6 +210,24 @@ def union_find_labels(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     return {x: find(x) for x in parent}
+
+
+def canonical_labels(
+    rows: Iterable[tuple[str, list[str] | None]],
+) -> list[tuple[str, str, int]]:
+    """(class_id, synonyms) rows -> (class_id, canonical_id, local_id), one
+    per row with a class id, in row order: classes sharing a synonym xref
+    merge (G1-G3). canonical_id is the smallest node of the class's
+    component, which may be a synonym xref rather than a class id; local_id
+    is dense from 0 in canonical_id order (Python str order is Spark's
+    UTF-8 binary order). Null class ids and null synonym elements are not
+    nodes."""
+    rows = [(cid, syns) for cid, syns in rows if cid is not None]
+    labels = union_find_labels(
+        (cid, x) for cid, syns in rows for x in [cid, *(syns or ())] if x is not None
+    )
+    local_ids = {c: i for i, c in enumerate(sorted(set(labels.values())))}
+    return [(cid, labels[cid], local_ids[labels[cid]]) for cid, _ in rows]
 
 
 def cc_incremental(

@@ -3,8 +3,10 @@ string-feature fusion.
 
 This is the heart of the engine — the reference's CandidateSelector
 (pathhier/candidate_selector.py:49-178) and BOW/LR scoring channels
-(pathhier/pw_aligner.py:290-326,628-660) recast as one declarative Spark
-join-and-aggregate chain:
+(pathhier/pw_aligner.py:290-326,628-660), in two forms:
+
+  * Spark column chains over any two token tables (candidate_pairs,
+    bow_link, ...):
 
     source side:  entity_id -> distinct token set        (explode)
     target side:  entity_id -> distinct token set        (explode)
@@ -14,21 +16,32 @@ join-and-aggregate chain:
     fusion:       0.75*max(name) + 0.25*max(def)          (A2)
     output:       threshold 0.25/0.1, top-10 per source   (T2)
 
+  * OntologyIndex, the KG pipeline's linker: the ontology side compiled
+    once on the driver into postings with IDF (the reference builds its
+    candidate selector the same way, once), broadcast, and probed by one
+    Arrow-batched Python function per mention partition.
+
 Scale design (100 TB / 10^12 docs):
-  * The ontology/dictionary side is small (10^4-10^6 classes) — its postings
-    table is broadcast, so candidate generation is a broadcast hash join with
-    NO shuffle of the (huge) mention side.
-  * High-document-frequency tokens are both useless (near-zero IDF) and the
-    skew bombs of this join. We prune postings with idf < IDF_LIMIT
-    (pathhier/constants.py:13 defines exactly this floor) before the join —
-    cheaper than salting and mirrors the reference's stopword+IDF discipline.
+  * The ontology/dictionary side is small (10^4-10^6 classes) and already
+    collected to the driver for canonicalization — its postings are
+    broadcast, so linking never shuffles the (huge) mention side beyond
+    one distinct.
+  * No IDF floor is applied: config.IDF_LIMIT (pathhier/constants.py:13)
+    is available to candidate_pairs as `idf_floor`, but the KG linker keeps
+    every posting, as the reference's selector does, because pruning hot
+    tokens changes which classes reach the top-20.
   * The per-pair aggregation keys on (source_id, target_id) which is
     near-unique — no skew. AQE handles residual imbalance.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import heapq
+from dataclasses import dataclass
+from functools import partial
+
+from pyspark.broadcast import Broadcast
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pathhier_spark import config
@@ -37,8 +50,10 @@ from pathhier_spark.functions.text import (
     char_ngrams,
     idf_table,
     jaccard,
+    normalize_string,
     tokenize,
 )
+from pathhier_spark.operators.canonicalize import canonical_labels
 
 
 def entity_token_table(
@@ -58,6 +73,27 @@ def entity_token_table(
     return df.select(F.col(id_col), F.array_distinct(merged).alias(out_tokens))
 
 
+def alias_tokens() -> Column:
+    """An ontology row's distinct alias tokens (alias_token_table's column)."""
+    return F.array_distinct(
+        F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a)))
+    )
+
+
+def class_tokens() -> Column:
+    """An ontology row's own distinct alias + definition tokens
+    (ontology_token_table's column). Null when aliases or definition is
+    null, as Spark's flatten makes it."""
+    return F.array_distinct(
+        F.flatten(
+            F.array(
+                F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a))),
+                F.flatten(F.transform(F.col("definition"), lambda d: tokenize(d))),
+            )
+        )
+    )
+
+
 def alias_token_table(ontology: DataFrame) -> DataFrame:
     """Alias-ONLY token sets (ent_id, tokens) — the source for parent/child
     structural expansion and for bootstrap hard-negative candidates. The
@@ -65,11 +101,202 @@ def alias_token_table(ontology: DataFrame) -> DataFrame:
     (candidate_selector.py:80-103: `kb[parent_id]['aliases']`,
     `kb[child_id]['aliases']`), never their definitions."""
     return ontology.select(
-        F.col("class_id").alias("ent_id"),
-        F.array_distinct(
-            F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a)))
-        ).alias("tokens"),
+        F.col("class_id").alias("ent_id"), alias_tokens().alias("tokens")
     )
+
+
+@dataclass(frozen=True)
+class ProbeTables:
+    """What the probes read, shipped to the Python workers once.
+
+    postings / alias_postings: token -> (idf, class ids holding it), over
+    the J3 token sets (own alias + definition tokens plus the alias tokens
+    of parents and children) and over the alias tokens alone.
+    names / defs: class -> token set of each alias / definition.
+    by_alias: normalized alias -> classes carrying it."""
+
+    postings: dict[str, tuple[float, tuple[str, ...]]]
+    alias_postings: dict[str, tuple[float, tuple[str, ...]]]
+    names: dict[str, tuple[frozenset, ...]]
+    defs: dict[str, tuple[frozenset, ...]]
+    by_alias: dict[str, tuple[str, ...]]
+
+
+def _postings(token_sets: dict, n_rows: int, log) -> dict:
+    """token -> (idf, class ids), idf as idf_table computes it:
+    log(doc_total / (df + 1)) with doc_total = ontology rows + 1."""
+    holders: dict[str, list[str]] = {}
+    for cid, toks in token_sets.items():
+        for t in toks:
+            holders.setdefault(t, []).append(cid)
+    doc_total = float(n_rows + 1)
+    idf: dict[int, float] = {}
+    for cids in holders.values():
+        if len(cids) not in idf:
+            idf[len(cids)] = log(doc_total / (len(cids) + 1))
+    return {t: (idf[len(cids)], tuple(cids)) for t, cids in holders.items()}
+
+
+def _token_sets(arrays) -> tuple[frozenset, ...]:
+    # a null alias or definition scores jaccard 0.0, like an empty one
+    return tuple(frozenset(a or ()) for a in arrays or ())
+
+
+@dataclass(frozen=True)
+class OntologyIndex:
+    """The ontology compiled once on the driver for linking and bootstrap
+    seeding (the reference's in-memory CandidateSelector,
+    candidate_selector.py:49-178): postings with IDF, token sets, the
+    normalized-alias dictionary and the canonical map.
+
+    compile() runs one Spark job: a collect of the ontology whose select
+    does all tokenizing and normalizing with the same column expressions
+    the Spark path uses, so no string is re-tokenized in Python (Spark's
+    trim strips only spaces; str.strip strips all whitespace). IDFs are
+    evaluated by the JVM's StrictMath.log, the function behind Spark's
+    `log`: Python's math.log differs in the last bit for some inputs (ln 3
+    among them), and mathematically tied candidate scores (with 27
+    classes, ln(28/9) = ln 2 + ln(14/9)) would then order differently at
+    the top-20 cut. Rows with a null class_id are never linked and are
+    left out."""
+
+    tables: ProbeTables
+    shipped: Broadcast
+    canonical: list[tuple[str, str, int]]
+
+    @classmethod
+    def compile(cls, ontology: DataFrame) -> OntologyIndex:
+        rows = ontology.select(
+            "class_id",
+            class_tokens().alias("own"),
+            alias_tokens().alias("alias_set"),
+            F.transform("aliases", lambda a: tokenize(a)).alias("alias_toks"),
+            F.transform("definition", lambda d: tokenize(d)).alias("def_toks"),
+            F.transform("aliases", lambda a: normalize_string(a)).alias("norms"),
+            F.concat("subClassOf", "part_of").alias("parents"),
+            "synonyms",
+        ).collect()
+        sc = ontology.sparkSession.sparkContext
+        classes = {r["class_id"]: r for r in rows if r["class_id"] is not None}
+        aliases = {cid: set(r["alias_set"] or ()) for cid, r in classes.items()}
+        # J3 (candidate_selector.py:80-107): relatives add their alias
+        # tokens; a class whose own token set is null stays without tokens
+        expanded = {cid: set(r["own"]) for cid, r in classes.items() if r["own"] is not None}
+        for cid, r in classes.items():
+            for parent in r["parents"] or ():
+                if parent in classes:
+                    if cid in expanded:
+                        expanded[cid] |= aliases[parent]
+                    if parent in expanded:
+                        expanded[parent] |= aliases[cid]
+        by_alias: dict[str, dict[str, None]] = {}
+        for cid, r in classes.items():
+            for norm in r["norms"] or ():
+                if norm is not None:
+                    by_alias.setdefault(norm, {})[cid] = None
+        log = sc._jvm.java.lang.StrictMath.log
+        tables = ProbeTables(
+            postings=_postings(expanded, len(rows), log),
+            alias_postings=_postings(aliases, len(rows), log),
+            names={cid: _token_sets(r["alias_toks"]) for cid, r in classes.items()},
+            defs={cid: _token_sets(r["def_toks"]) for cid, r in classes.items()},
+            by_alias={norm: tuple(cids) for norm, cids in by_alias.items()},
+        )
+        canonical = canonical_labels((r["class_id"], r["synonyms"]) for r in rows)
+        return cls(tables, sc.broadcast(tables), canonical)
+
+    def link(self, mentions: DataFrame) -> DataFrame:
+        """(mention) -> (mention, class_id, link_score): link_mentions'
+        chain, one probe per distinct mention."""
+        return (
+            mentions.select("mention")
+            .distinct()
+            .select("mention", tokenize(F.col("mention")).alias("tokens"))
+            .mapInPandas(
+                partial(_link_batches, self.shipped),
+                "mention string, class_id string, link_score double",
+            )
+        )
+
+    def alias_matches(self, mentions: DataFrame, top_n: int) -> DataFrame:
+        """(mention) -> (mention, positives, ranked) for every distinct
+        mention equal to an alias after normalize_string: the classes
+        carrying that alias, and the mention's top_n candidates over the
+        alias-only postings in rank order (bootstrap seeding)."""
+        return (
+            mentions.select("mention")
+            .distinct()
+            .select(
+                "mention",
+                normalize_string(F.col("mention")).alias("norm"),
+                tokenize(F.col("mention")).alias("tokens"),
+            )
+            .mapInPandas(
+                partial(_alias_match_batches, self.shipped, top_n),
+                "mention string, positives array<string>, ranked array<string>",
+            )
+        )
+
+
+def rank_candidates(tokens, postings: dict, top_n: int) -> list[str]:
+    """candidate_pairs for one source: classes sharing a token, scored by
+    the sum of the token IDFs, added in the tokens' first-occurrence order
+    as Spark's per-pair sum adds them; top_n by (score desc, class_id)."""
+    scores: dict[str, float] = {}
+    for t in dict.fromkeys(tokens):
+        if t in postings:
+            idf, cids = postings[t]
+            for c in cids:
+                scores[c] = scores.get(c, 0.0) + idf
+    return heapq.nsmallest(top_n, scores, key=lambda c: (-scores[c], c))
+
+
+def _jaccard(a: frozenset, b: frozenset) -> float:
+    union = len(a | b)
+    return len(a & b) / union if union else 0.0
+
+
+def _link_batches(shipped: Broadcast, batches):
+    import pandas as pd
+
+    t: ProbeTables = shipped.value
+    for pdf in batches:
+        out = []
+        for mention, toks in zip(pdf["mention"], pdf["tokens"]):
+            if toks is None:
+                continue
+            m = frozenset(toks)
+            best = None
+            for cid in rank_candidates(toks, t.postings, config.KEEP_TOP_N_CANDIDATES):
+                if not t.names[cid]:
+                    continue  # no alias: Spark's array_max is null
+                score = config.NAME_WEIGHT * max(
+                    _jaccard(m, a) for a in t.names[cid]
+                ) + config.DEF_WEIGHT * max(
+                    (_jaccard(m, d) for d in t.defs[cid]), default=0.0
+                )
+                if score >= config.SIMSCORE_THRESHOLD and (
+                    best is None or (-score, cid) < (-best[1], best[0])
+                ):
+                    best = (cid, score)
+            if best is not None:
+                out.append((mention, *best))
+        if out:
+            yield pd.DataFrame(out, columns=["mention", "class_id", "link_score"])
+
+
+def _alias_match_batches(shipped: Broadcast, top_n: int, batches):
+    import pandas as pd
+
+    t: ProbeTables = shipped.value
+    for pdf in batches:
+        out = [
+            (mention, list(t.by_alias[norm]), rank_candidates(toks, t.alias_postings, top_n))
+            for mention, norm, toks in zip(pdf["mention"], pdf["norm"], pdf["tokens"])
+            if norm in t.by_alias
+        ]
+        if out:
+            yield pd.DataFrame(out, columns=["mention", "positives", "ranked"])
 
 
 def candidate_pairs(

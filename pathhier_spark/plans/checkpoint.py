@@ -9,10 +9,12 @@ parquet stage outputs plus a lineage manifest:
   <root>/<stage>/            committed parquet output (atomic via _SUCCESS)
   <root>/_lineage.jsonl      one row per committed stage:
                              {stage, fingerprint, rows, wall_ms, ts,
-                              partitions}
+                              partitions, partition_rows, schema}
 
 A stage re-runs only if (a) its output is absent, or (b) its input
-fingerprint changed. That is the north rule's "resumable from checkpoint
+fingerprint changed. A resumed stage is read with its recorded schema, so
+resuming writes nothing and runs no Spark job (parquet schema inference
+would run one per stage). That is the north rule's "resumable from checkpoint
 with per-partition lineage + metrics"; at cluster scale the same layout maps
 1:1 onto Iceberg table commits (swap the writer, keep the manifest)."""
 
@@ -25,6 +27,7 @@ from collections.abc import Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _hidden(name: str) -> bool:
@@ -83,12 +86,16 @@ class CheckpointManager:
         with open(self._lineage_path, "a") as f:
             f.write(json.dumps(row) + "\n")
 
-    def _committed(self, stage: str, fingerprint: str) -> bool:
+    def _committed(self, stage: str, fingerprint: str) -> dict | None:
+        """The stage's last lineage row, if its output is committed under
+        this fingerprint with a recorded schema."""
         out = os.path.join(self.root, stage)
         if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            return False
+            return None
         rows = [r for r in self.lineage() if r["stage"] == stage]
-        return bool(rows) and rows[-1]["fingerprint"] == fingerprint
+        if rows and rows[-1]["fingerprint"] == fingerprint and "schema" in rows[-1]:
+            return rows[-1]
+        return None
 
     # -- stage execution -------------------------------------------------------
 
@@ -104,8 +111,10 @@ class CheckpointManager:
         it first if absent or stale. Idempotent: killing the job after any
         stage and re-running skips all committed stages."""
         out = os.path.join(self.root, name)
-        if self._committed(name, fingerprint):
-            return self.spark.read.parquet(out)
+        committed = self._committed(name, fingerprint)
+        if committed is not None:
+            schema = StructType.fromJson(json.loads(committed["schema"]))
+            return self.spark.read.schema(schema).parquet(out)
         t0 = time.time()
         df = build()
         writer = df.write.mode("overwrite")
@@ -114,6 +123,7 @@ class CheckpointManager:
         writer.parquet(out)
         part_rows = footer_row_counts(out, partition_by or [])
         n = sum(p["rows"] for p in part_rows)
+        result = self.spark.read.parquet(out)
         self._append_lineage(
             {
                 "stage": name,
@@ -123,6 +133,7 @@ class CheckpointManager:
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 "partitions": partition_by or [],
                 "partition_rows": json.dumps(part_rows),
+                "schema": result.schema.json(),
             }
         )
-        return self.spark.read.parquet(out)
+        return result

@@ -6,15 +6,17 @@
 Each stage is a pure DataFrame -> DataFrame function; run_pipeline wires
 them through CheckpointManager so any stage resumes idempotently.
 
-Fixed Spark overhead per call is kept off ontology-sized work:
-canonicalize_classes collects the synonym graph once and merges it with a
-driver-side union-find; bootstrap_rescore_links fits its LR on the seed
+Fixed Spark overhead per call is kept off ontology-sized work: the
+ontology is compiled once per call on the driver (OntologyIndex, one
+collect job) into broadcast postings, which linking and bootstrap seeding
+probe from one Arrow-batched Python function each, and whose union-find
+gives the canonical map; bootstrap_rescore_links fits its LR on the seed
 table without running the bootstrap iterations its model never uses; and
 run_pipeline_incremental evaluates a batch's mentions and edges once each,
 however many branches of the commit read them.
 
-Linking semantics (reference chain): token inverted-index candidate join
-with IDF scoring (candidate_selector.py:148-178) capped at top-20
+Linking semantics (reference chain): token inverted-index candidates with
+IDF scoring (candidate_selector.py:148-178) capped at top-20
 (constants.py:16), then name/definition channel scores fused
 0.75/0.25 with max-per-channel (pw_aligner.py:290-326) and thresholded at
 SIMSCORE_THRESHOLD=0.25, finally top-1 per mention.
@@ -22,31 +24,28 @@ SIMSCORE_THRESHOLD=0.25, finally top-1 per mention.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pathhier_spark import config
-from pathhier_spark.functions.text import jaccard, tokenize
-from pathhier_spark.operators.canonicalize import union_find_labels
+from pathhier_spark.operators.canonicalize import canonical_labels
 from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
-from pathhier_spark.operators.linking import alias_token_table, candidate_pairs
+from pathhier_spark.operators.linking import (
+    OntologyIndex,
+    alias_token_table,
+    class_tokens,
+)
 from pathhier_spark.plans.checkpoint import CheckpointManager
 
 
 def ontology_token_table(ontology: DataFrame) -> DataFrame:
     """Class token sets: aliases + definitions (candidate_selector.py:60-78;
-    link_mentions adds the J3 parent/child tokens via expand_structural_tokens)."""
+    expand_structural_tokens adds the J3 parent/child tokens). With
+    expand_structural_tokens and candidate_pairs this is the Spark form of
+    OntologyIndex's postings, which tests hold the index to."""
     return ontology.select(
-        F.col("class_id").alias("ent_id"),
-        F.array_distinct(
-            F.flatten(
-                F.array(
-                    F.flatten(F.transform(F.col("aliases"), lambda a: tokenize(a))),
-                    F.flatten(F.transform(F.col("definition"), lambda d: tokenize(d))),
-                )
-            )
-        ).alias("tokens"),
+        F.col("class_id").alias("ent_id"), class_tokens().alias("tokens")
     )
 
 
@@ -95,75 +94,22 @@ def expand_structural_tokens(ontology: DataFrame, tokens: DataFrame) -> DataFram
 def link_mentions(mentions: DataFrame, ontology: DataFrame) -> DataFrame:
     """mention string -> class_id. Returns (mention, class_id, link_score).
 
-    Chain: distinct mentions -> candidate join (broadcast ontology postings,
-    IDF-scored, top-20) -> name channel = max token-jaccard vs any alias,
-    def channel = max token-jaccard vs any definition -> 0.75/0.25 fusion ->
-    threshold -> top-1 per mention. The mention side is huge (one row per
-    distinct surface form) and never shuffles except the final window, which
-    keys on mention — uniform. The ontology side is small enough to
-    broadcast, as canonicalize_classes already collects it to the driver.
+    Chain: distinct mentions -> IDF-scored candidates top-20 -> name
+    channel = max token-jaccard vs any alias, def channel = max
+    token-jaccard vs any definition -> 0.75/0.25 fusion -> threshold ->
+    top-1 per mention. The ontology side is compiled once on the driver
+    (OntologyIndex: one collect job) and broadcast; the mention side is
+    tokenized by Spark and probed by one mapInPandas function, so it never
+    shuffles except for the distinct.
 
     Each class's candidate-generation token set includes its parents' and
     children's alias tokens (J3, candidate_selector.py:80-107 — the
     reference always does this), so a mention sharing tokens only with a
     class's parent can still surface that class as a candidate. Channel
     scoring is unchanged: structural tokens widen recall of the candidate
-    stage, the alias/definition jaccard channels still decide the link."""
-    distinct_mentions = mentions.select(F.col("mention")).distinct()
-    m_tokens = distinct_mentions.select(
-        F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
-    )
-    o_tokens = expand_structural_tokens(ontology, ontology_token_table(ontology))
-    cands = candidate_pairs(m_tokens, o_tokens)  # broadcast, top-20
-    # channel scores vs the class record (J5 pair expansion: mention x alias)
-    classes = ontology.select(
-        F.col("class_id").alias("t_id"),
-        F.col("aliases"),
-        F.col("definition"),
-    )
-    scored = (
-        cands.join(F.broadcast(classes), "t_id")
-        .withColumn("m_toks", tokenize(F.col("s_id")))
-        .withColumn(
-            "name_s",
-            F.array_max(
-                F.transform(
-                    F.col("aliases"), lambda a: jaccard(F.col("m_toks"), tokenize(a))
-                )
-            ),
-        )
-        .withColumn(
-            "def_s",
-            F.coalesce(
-                F.array_max(
-                    F.transform(
-                        F.col("definition"),
-                        lambda d: jaccard(F.col("m_toks"), tokenize(d)),
-                    )
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .select(
-            "s_id",
-            "t_id",
-            (
-                config.NAME_WEIGHT * F.col("name_s")
-                + config.DEF_WEIGHT * F.col("def_s")
-            ).alias("link_score"),
-        )
-        .filter(F.col("link_score") >= config.SIMSCORE_THRESHOLD)
-    )
-    w = Window.partitionBy("s_id").orderBy(F.col("link_score").desc(), F.col("t_id"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select(
-            F.col("s_id").alias("mention"),
-            F.col("t_id").alias("class_id"),
-            "link_score",
-        )
-    )
+    stage, the alias/definition jaccard channels still decide the link.
+    No IDF floor prunes the postings."""
+    return OntologyIndex.compile(ontology).link(mentions)
 
 
 def assemble_triples(mentions: DataFrame, links: DataFrame) -> DataFrame:
@@ -188,25 +134,17 @@ def assemble_triples(mentions: DataFrame, links: DataFrame) -> DataFrame:
 def canonicalize_classes(ontology: DataFrame) -> DataFrame:
     """Canonical ids over the ontology synonym-xref graph: classes sharing a
     synonym xref merge (G1-G3 semantics). Output: (class_id, canonical_id,
-    local_id), one row per ontology class.
+    local_id), one row per ontology class — see canonical_labels.
 
     The graph is ontology-sized, so it is collected once and merged with
-    the reference's driver-side union-find (union_find_labels) instead of
-    Spark's per-round star jobs — the same trade link_mentions makes when
-    it broadcasts ontology postings from the driver. canonical_id is the
-    smallest node of the class's component, which may be a synonym xref
-    rather than a class id; local_id is dense from 0 in canonical_id order
-    (Python str order is Spark's UTF-8 binary order). Null class ids and
-    null synonym elements are not nodes. The result is a small local frame."""
-    rows = [
-        (r["class_id"], r["synonyms"])
-        for r in ontology.select("class_id", "synonyms").collect()
-        if r["class_id"] is not None
-    ]
-    labels = union_find_labels(
-        (cid, x) for cid, syns in rows for x in [cid, *(syns or ())] if x is not None
-    )
-    local_ids = {c: i for i, c in enumerate(sorted(set(labels.values())))}
+    the reference's driver-side union-find, the one OntologyIndex runs
+    when it compiles the whole ontology, instead of Spark's per-round star
+    jobs. The result is a small local frame."""
+    rows = ontology.select("class_id", "synonyms").collect()
+    return _canonical_frame(ontology, canonical_labels(rows))
+
+
+def _canonical_frame(ontology: DataFrame, canonical: list) -> DataFrame:
     schema = T.StructType(
         [
             ontology.schema["class_id"],
@@ -214,9 +152,7 @@ def canonicalize_classes(ontology: DataFrame) -> DataFrame:
             T.StructField("local_id", T.LongType(), False),
         ]
     )
-    return ontology.sparkSession.createDataFrame(
-        [(cid, labels[cid], local_ids[labels[cid]]) for cid, _ in rows], schema
-    )
+    return ontology.sparkSession.createDataFrame(canonical, schema)
 
 
 def canonical_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
@@ -360,6 +296,8 @@ def run_pipeline_incremental(
     in tests): every stage is per-document except linking, whose IDF and
     candidate postings come from the ONTOLOGY side only (link_mentions) —
     no corpus-level statistic exists to drift between batch and full runs.
+    The ontology is compiled once per batch (OntologyIndex), for both the
+    link probe and the canonical map.
 
     Per-batch cost is proportional to the batch (the 10^12-document
     story: the crawl delta, not the corpus, pays extraction+linking);
@@ -373,6 +311,7 @@ def run_pipeline_incremental(
     from pathhier_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(spark, warehouse_root)
+    index = OntologyIndex.compile(ontology)
     extracted = with_extracted_text(new_documents).select(
         "url", "warc_ts", "lang", "extracted_text"
     )
@@ -383,14 +322,13 @@ def run_pipeline_incremental(
     mentions = extract_mentions(
         extracted.withColumnRenamed("extracted_text", "text")
     ).persist()
-    links = link_mentions(
+    links = index.link(
         mentions.select(F.col("subj_mention").alias("mention")).union(
             mentions.select(F.col("obj_mention").alias("mention"))
-        ),
-        ontology,
+        )
     )
     triples = assemble_triples(mentions, links)
-    canon = canonicalize_classes(ontology)
+    canon = _canonical_frame(ontology, index.canonical)
     edges = canonical_edges(triples, canon).persist()
     fingerprint = f"batch:{batch_id}"
     try:
@@ -479,16 +417,17 @@ def bootstrap_rescore_links(
     # lineage is the whole upstream extraction chain, and re-deriving the
     # mention vocabulary from it would recompute that chain a second time.
     # Same set: feats = links ⋈ class_names on class_id, and every link
-    # class_id exists in the ontology by construction of candidate_pairs.
-    seed_pairs = bootstrap_seed_labels(
-        feats.select(F.col("s_id").alias("mention")).distinct(), ontology
-    ).localCheckpoint(eager=True)
-    if seed_pairs.limit(1).count() > 0:
-        seed = pair_features(
-            seed_pairs.join(class_names, "class_id"), "mention", "name"
-        ).select(*FEATURE_COLS, "label")
-    else:
-        seed = feats.filter(
+    # class_id exists in the ontology by construction of the link probe.
+    seed = pair_features(
+        bootstrap_seed_labels(
+            feats.select(F.col("s_id").alias("mention")), ontology
+        ).join(class_names, "class_id"),
+        "mention",
+        "name",
+    ).select(*FEATURE_COLS, "label")
+    rows = collect_training_rows(seed.localCheckpoint(eager=True))
+    if not rows:
+        fallback = feats.filter(
             (F.col("link_score") >= 0.75) | (F.col("link_score") <= 0.3)
         ).select(
             *FEATURE_COLS,
@@ -496,7 +435,8 @@ def bootstrap_rescore_links(
             .otherwise(F.lit(0))
             .alias("label"),
         )
-    model = fit_lr(collect_training_rows(seed.localCheckpoint(eager=True)))
+        rows = collect_training_rows(fallback.localCheckpoint(eager=True))
+    model = fit_lr(rows)
     return lr_score(feats, model.coef, model.intercept).select(
         F.col("s_id").alias("mention"),
         F.col("t_id").alias("class_id"),

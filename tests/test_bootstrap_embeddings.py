@@ -81,6 +81,127 @@ def test_bootstrap_seed_labels(spark):
     }
 
 
+def _spark_seed_labels(mentions, ontology, *, n_hard=2, n_easy=2, seed=42):
+    """bootstrap_seed_labels as a pure Spark chain (candidate_pairs over
+    alias_token_table, joins and windows): the reference the index probe
+    is held to."""
+    from pyspark.sql import Window
+
+    from pathhier_spark.functions.text import normalize_string, tokenize
+    from pathhier_spark.operators.linking import alias_token_table, candidate_pairs
+
+    aliases = ontology.select(
+        F.col("class_id"), F.explode("aliases").alias("alias")
+    ).select("class_id", normalize_string(F.col("alias")).alias("norm_alias"))
+    m = mentions.select(
+        F.col("mention"), normalize_string(F.col("mention")).alias("norm_m")
+    ).distinct()
+    positives = (
+        m.join(F.broadcast(aliases), m["norm_m"] == aliases["norm_alias"])
+        .select("mention", "class_id")
+        .distinct()
+    )
+    pos_mentions = positives.select("mention").distinct()
+
+    m_tokens = pos_mentions.select(
+        F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
+    )
+    cands = candidate_pairs(
+        m_tokens, alias_token_table(ontology), top_n=2 + n_hard
+    ).select(
+        F.col("s_id").alias("mention"), F.col("t_id").alias("class_id"), "rank"
+    )
+    hard = (
+        cands.filter((F.col("rank") > 3) & (F.col("rank") <= 2 + n_hard))
+        .join(positives, ["mention", "class_id"], "left_anti")
+        .select("mention", "class_id")
+    )
+
+    classes = ontology.select("class_id")
+    hw = Window.partitionBy("mention").orderBy(
+        F.xxhash64("mention", "class_id", F.lit(seed)), F.col("class_id")
+    )
+    excl_counts = (
+        positives.select("mention", "class_id")
+        .union(cands.select("mention", "class_id"))
+        .distinct()
+        .groupBy("mention")
+        .agg(F.count(F.lit(1)).alias("n_excl"))
+    )
+    max_excl = excl_counts.agg(F.max("n_excl")).collect()[0][0] or 0
+    drawn = (
+        pos_mentions.join(F.broadcast(excl_counts), "mention", "left")
+        .select("mention", F.coalesce("n_excl", F.lit(0)).alias("n_excl"))
+        .crossJoin(F.broadcast(classes))
+        .withColumn("hr", F.row_number().over(hw))
+        .filter(F.col("hr") <= n_easy + max_excl)
+        .filter(F.col("hr") <= F.lit(n_easy) + F.col("n_excl"))
+        .join(positives, ["mention", "class_id"], "left_anti")
+        .join(cands.select("mention", "class_id"), ["mention", "class_id"], "left_anti")
+    )
+    rw = Window.partitionBy("mention").orderBy("hr")
+    easy = (
+        drawn.withColumn("rr", F.row_number().over(rw))
+        .filter(F.col("rr") <= n_easy)
+        .select("mention", "class_id")
+    )
+    return (
+        positives.select(
+            "mention", "class_id", F.lit(1).alias("label"),
+            F.lit("seed_pos").alias("provenance"),
+        )
+        .union(hard.select(
+            "mention", "class_id", F.lit(0).alias("label"),
+            F.lit("seed_hardneg").alias("provenance"),
+        ))
+        .union(easy.select(
+            "mention", "class_id", F.lit(0).alias("label"),
+            F.lit("seed_easyneg").alias("provenance"),
+        ))
+    )
+
+
+def _corpus_mentions(spark):
+    from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
+
+    c = corpus_mod.generate(n_classes=50, n_docs=100, seed=5)
+    docs, onto, *_ = corpus_mod.to_spark(spark, c)
+    ext = with_extracted_text(docs).select("url", F.col("extracted_text").alias("text"))
+    m = extract_mentions(ext)
+    return m.select(F.col("subj_mention").alias("mention")).union(
+        m.select(F.col("obj_mention").alias("mention"))
+    ), onto
+
+
+def _tie_heavy_mentions(spark, tie_heavy_ontology):
+    ontology, mentions = tie_heavy_ontology
+    # alias spellings that only match after normalize_string
+    variants = [f" {c['aliases'][0].upper().replace(' ', '-')}" for c in ontology[::3]]
+    onto = spark.createDataFrame(
+        [tuple(c.values()) for c in ontology], corpus_mod.ONTOLOGY_SCHEMA
+    )
+    m_df = spark.createDataFrame([(m,) for m in mentions + variants], "mention string")
+    return m_df, onto
+
+
+@pytest.mark.parametrize("inputs", ["corpus", "tie_heavy"])
+def test_seed_labels_match_spark_oracle(spark, tie_heavy_ontology, inputs):
+    """The index probe gives the Spark chain's seed table exactly."""
+    from pathhier_spark.operators.bootstrap import bootstrap_seed_labels
+
+    if inputs == "corpus":
+        mentions, onto = _corpus_mentions(spark)
+    else:
+        mentions, onto = _tie_heavy_mentions(spark, tie_heavy_ontology)
+    mentions = mentions.localCheckpoint(eager=True)
+    cols = ["mention", "class_id", "label", "provenance"]
+    got = [tuple(r) for r in bootstrap_seed_labels(mentions, onto).select(*cols).collect()]
+    want = {tuple(r) for r in _spark_seed_labels(mentions, onto).select(*cols).collect()}
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert {r[3] for r in want} == {"seed_pos", "seed_hardneg", "seed_easyneg"}
+
+
 def test_entity_bow_embeddings(spark):
     ents = spark.createDataFrame(
         [("e1", ["alpha", "beta"]), ("e2", ["alpha"]), ("e3", ["zzz_oov"])],

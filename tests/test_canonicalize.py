@@ -1,7 +1,6 @@
 """Connected components vs the union-find oracle (FIXTURES.md §4 cases)."""
 
 import random
-import time
 
 from pathhier_spark.functions.oracle import UnionFind
 from pathhier_spark.operators.canonicalize import (
@@ -226,27 +225,18 @@ def test_canonicalize_classes_ignores_null_xrefs(spark):
     assert got == {"A": ("A", 0), "B": ("A", 0), "C": ("C", 1)}
 
 
-def test_canonicalize_classes_job_count(spark):
+def test_canonicalize_classes_job_count(spark, spark_jobs):
     """One collect of the ontology plus the caller's materialization."""
     from pathhier_spark.plans.pipeline import canonicalize_classes
 
-    sc = spark.sparkContext
     onto = spark.createDataFrame(
         _synonym_graph(4), "class_id string, synonyms array<string>"
     ).localCheckpoint(eager=True)
-    group = "test_canonicalize_classes_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        canonicalize_classes(onto).localCheckpoint(eager=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store asynchronously
-    deadline = time.monotonic() + 10
-    while not sc.statusTracker().getJobIdsForGroup(group):
-        assert time.monotonic() < deadline, "no job recorded for the group"
-        time.sleep(0.05)
-    time.sleep(0.5)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    _, n = spark_jobs(
+        lambda: canonicalize_classes(onto).localCheckpoint(eager=True),
+        "test_canonicalize_classes_job_count",
+    )
+    assert n <= 2
 
 
 def test_union_find_labels_long_chain():

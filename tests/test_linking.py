@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from pathhier_spark import config
 from pathhier_spark.functions import oracle
+from pathhier_spark.functions.text import idf_table
 from pathhier_spark.operators.linking import (
     FEATURE_COLS,
     bow_link,
@@ -217,36 +218,14 @@ def _oracle_link(mentions, ontology):
     return out
 
 
-def test_link_mentions_vs_oracle(spark):
+def test_link_mentions_vs_oracle(spark, tie_heavy_ontology):
     """The one linking path, row for row, on a seeded random ontology whose
     small vocabulary makes shared tokens, candidate-score ties and
     channel-score ties common."""
-    import random
-
     from pathhier_spark.plans.pipeline import link_mentions
     from pathhier_spark.sources.corpus import ONTOLOGY_SCHEMA
 
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(14)] + ["the", "of", "pathway"]
-
-    def phrase(lo=1, hi=3):
-        return " ".join(rng.choice(vocab) for _ in range(rng.randint(lo, hi)))
-
-    ids = [f"C{i:03d}" for i in range(60)]
-    ontology = []
-    for i, cid in enumerate(ids):
-        earlier = ids[:i]
-        ontology.append({
-            "class_id": cid,
-            "name": phrase(),
-            "aliases": [phrase() for _ in range(rng.randint(1, 3))],
-            "synonyms": [],
-            "definition": [phrase(2, 6) for _ in range(rng.randint(0, 2))],
-            "subClassOf": rng.sample(earlier, min(len(earlier), rng.randint(0, 2))),
-            "part_of": rng.sample(earlier, min(len(earlier), rng.randint(0, 1))),
-            "instances": [],
-        })
-    mentions = sorted({phrase() for _ in range(150)} | {"the of", "unseen token"})
+    ontology, mentions = tie_heavy_ontology
     onto = spark.createDataFrame(
         [tuple(c.values()) for c in ontology], ONTOLOGY_SCHEMA
     )
@@ -260,6 +239,112 @@ def test_link_mentions_vs_oracle(spark):
     assert {m: c for m, (c, _) in got.items()} == {m: c for m, (c, _) in want.items()}
     for m, (_, score) in want.items():
         assert got[m][1] == pytest.approx(score, abs=1e-9), m
+
+
+def _ontology_frame(spark, classes):
+    """(class_id, aliases, definition, parents) tuples -> ontology frame."""
+    from pathhier_spark.sources.corpus import ONTOLOGY_SCHEMA
+
+    return spark.createDataFrame(
+        [(cid, cid, al, [], df, list(par), [], []) for cid, al, df, par in classes],
+        ONTOLOGY_SCHEMA,
+    )
+
+
+def _spark_idf(tokens):
+    return {r["token"]: r["idf"].hex() for r in idf_table(tokens).collect()}
+
+
+def test_index_idf_bit_identical_to_idf_table(spark):
+    """The index's IDFs are idf_table's, bit for bit, for the J3 postings
+    and for the alias-only postings. With 11 classes the IDF of a token in
+    3 classes is ln 3, where Python's math.log is one ulp off the JVM's."""
+    import random
+
+    from pathhier_spark.operators.linking import OntologyIndex, alias_token_table
+    from pathhier_spark.plans.pipeline import expand_structural_tokens, ontology_token_table
+
+    rng = random.Random(11)
+    vocab = [f"t{i}" for i in range(8)]
+    ids = [f"K{i:02d}" for i in range(11)]
+    classes = [
+        (
+            cid,
+            [" ".join(rng.sample(vocab, rng.randint(1, 2))) for _ in range(rng.randint(1, 2))],
+            [" ".join(rng.sample(vocab, 2))] if rng.random() < 0.5 else [],
+            rng.sample(ids[:i], min(i, 1)),
+        )
+        for i, cid in enumerate(ids)
+    ]
+    onto = _ontology_frame(spark, classes)
+    tables = OntologyIndex.compile(onto).tables
+
+    want = _spark_idf(expand_structural_tokens(onto, ontology_token_table(onto)))
+    assert {t: idf.hex() for t, (idf, _) in tables.postings.items()} == want
+    want_alias = _spark_idf(alias_token_table(onto))
+    assert {t: idf.hex() for t, (idf, _) in tables.alias_postings.items()} == want_alias
+    # the ln 3 case occurs in both tables
+    for postings in (tables.postings, tables.alias_postings):
+        assert any(len(cids) == 3 for _, cids in postings.values())
+
+
+def test_index_ranks_tied_scores_like_candidate_pairs(spark):
+    """A mathematical tie at the top-20 cut: with 27 classes, alpha (in 8
+    classes) scores ln(28/9) and beta + gamma (in 13 and 17 classes) score
+    ln 2 + ln(14/9), the same real number. The JVM's log puts the first
+    above the second; Python's math.log makes them equal, which would drop
+    another class at rank 20 and reorder the top 4. The index must keep
+    candidate_pairs' ranks on the J3 postings and on the alias-only ones
+    the bootstrap hard negatives use."""
+    from pathhier_spark.functions.text import tokenize
+    from pathhier_spark.operators.linking import (
+        OntologyIndex,
+        alias_token_table,
+        rank_candidates,
+    )
+    from pathhier_spark.plans.pipeline import expand_structural_tokens, ontology_token_table
+
+    alpha = {2, 5, 8, 11, 14, 17, 19, 20}
+    classes = [
+        (f"C{i:02d}", ["alpha"] if i in alpha else ["beta gamma"], [], [])
+        for i in range(21)
+    ]
+    classes += [(f"G{i}", ["gamma"], [], []) for i in range(4)]
+    classes += [(f"F{i}", ["delta"], [], []) for i in range(2)]
+    onto = _ontology_frame(spark, classes)
+    mention = spark.createDataFrame([("beta gamma alpha",)], "mention string").select(
+        F.col("mention").alias("s_id"), tokenize(F.col("mention")).alias("tokens")
+    )
+    tables = OntologyIndex.compile(onto).tables
+    toks = ["beta", "gamma", "alpha"]
+
+    def spark_ranks(target, top_n):
+        return [r["t_id"] for r in candidate_pairs(mention, target, top_n=top_n)
+                .orderBy("rank").collect()]
+
+    j3 = spark_ranks(expand_structural_tokens(onto, ontology_token_table(onto)), 20)
+    assert j3[:8] == sorted(f"C{i:02d}" for i in alpha) and "C18" not in j3
+    assert rank_candidates(toks, tables.postings, 20) == j3
+    top4 = spark_ranks(alias_token_table(onto), 4)
+    assert top4 == ["C02", "C05", "C08", "C11"]
+    assert rank_candidates(toks, tables.alias_postings, 4) == top4
+
+
+def test_link_mentions_job_count(spark, spark_jobs, tie_heavy_ontology):
+    """One ontology collect, then the mention distinct and the probe."""
+    from pathhier_spark.plans.pipeline import link_mentions
+    from pathhier_spark.sources.corpus import ONTOLOGY_SCHEMA
+
+    ontology, mentions = tie_heavy_ontology
+    onto = spark.createDataFrame(
+        [tuple(c.values()) for c in ontology], ONTOLOGY_SCHEMA
+    ).localCheckpoint(eager=True)
+    m_df = spark.createDataFrame([(m,) for m in mentions], "mention string")
+    _, n = spark_jobs(
+        lambda: link_mentions(m_df, onto).localCheckpoint(eager=True),
+        "test_link_mentions_job_count",
+    )
+    assert n <= 3
 
 
 # --------------------------- dictionary_augment ---------------------------

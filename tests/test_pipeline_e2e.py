@@ -18,7 +18,15 @@ def corpus(spark):
     return corpus_mod.to_spark(spark, c)
 
 
-def test_pipeline_pr_and_resume(spark, corpus, tmp_path_factory):
+def _file_tree(root):
+    return {
+        os.path.relpath(os.path.join(d, n), root): os.stat(os.path.join(d, n)).st_mtime_ns
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+    }
+
+
+def test_pipeline_pr_and_resume(spark, corpus, tmp_path_factory, spark_jobs):
     docs, onto, gold_triples, gold_mentions, xref_pairs, gold_components = corpus
     root = str(tmp_path_factory.mktemp("ckpt"))
 
@@ -46,9 +54,15 @@ def test_pipeline_pr_and_resume(spark, corpus, tmp_path_factory):
     assert hi is not None and hi > 0.5
     assert all(r["wall_ms"] >= 0 and r["rows"] > 0 for r in lineage)
 
-    # --- resume: rerun skips all stages (no new lineage rows), same rows ---
+    # --- resume: rerun skips all stages (no new lineage rows), same rows,
+    # touches no file and runs only the two fingerprint aggregates (two
+    # jobs each under AQE): committed stages are read with their recorded
+    # schema, not by a schema-inference job ---
     n_lineage_before = len(lineage)
-    out2 = run_pipeline(spark, docs, onto, root)
+    files_before = _file_tree(root)
+    out2, n_jobs = spark_jobs(lambda: run_pipeline(spark, docs, onto, root), "resume")
+    assert n_jobs <= 4
+    assert _file_tree(root) == files_before
     assert len(out2["lineage"].collect()) == n_lineage_before
     assert out2["triples"].count() == out["triples"].count()
 
@@ -315,9 +329,10 @@ def test_incremental_recrawl_replaces_and_tombstones(spark, corpus,
     assert out4["edges"].count() == n_other_before
 
 
-def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus):
+def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus, spark_jobs):
     """bootstrap_rescore_links fits the seed table directly; its p1 must be
-    the score of the model bootstrap_loop returns over the same inputs."""
+    the score of the model bootstrap_loop returns over the same inputs. It
+    runs at most 12 Spark jobs, its caller's collect included."""
     from pathhier_spark.operators.bootstrap import (
         bootstrap_loop,
         bootstrap_seed_labels,
@@ -336,10 +351,12 @@ def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus):
         ),
         onto,
     ).localCheckpoint(eager=True)
-    got = {
-        (r["mention"], r["class_id"]): r["p1"]
-        for r in bootstrap_rescore_links(spark, links, onto).collect()
-    }
+    rows, n_jobs = spark_jobs(
+        lambda: bootstrap_rescore_links(spark, links, onto).collect(),
+        "bootstrap_rescore_links",
+    )
+    assert n_jobs <= 12
+    got = {(r["mention"], r["class_id"]): r["p1"] for r in rows}
 
     class_names = F.broadcast(onto.select("class_id", "name"))
     feats = pair_features(links.join(class_names, "class_id"), "mention", "name").select(
