@@ -12,7 +12,12 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("pathhier_spark_tests", cores=8, shuffle_partitions=8)
+    # local[4]: the cores set the default parallelism, i.e. the partitions
+    # of every createDataFrame/parallelize input and so the tasks of each
+    # scan and Python-UDF stage. The suite's inputs are tiny and its time
+    # is per-task overhead: local[8] ran the same tests ~1.5x slower on a
+    # 4-core host, and spark.default.parallelism=8 on local[4] as slowly.
+    spark = get_spark("pathhier_spark_tests", cores=4, shuffle_partitions=8)
     yield spark
 
 
