@@ -102,7 +102,7 @@ def split_train_dev(
 
 def bootstrap_seed_labels(
     mentions: DataFrame,
-    ontology: DataFrame,
+    index: OntologyIndex,
     *,
     n_hard: int = 2,
     n_easy: int = 2,
@@ -125,12 +125,12 @@ def bootstrap_seed_labels(
         nor candidates of ranks 1..2+n_hard.
 
     Positives and candidate ranks come from one probe of the compiled
-    ontology (OntologyIndex.alias_matches); the easy-negative draw is a
-    Spark step over the positive mentions. All sets are bounded by the
-    ontology side (positives <= aliases), so the seed table stays small no
-    matter how large the mention corpus is. Output: (mention, class_id,
+    ontology (index.alias_matches); the easy-negative draw is a Spark step
+    over the positive mentions and the index's ontology frame. All sets are
+    bounded by the ontology side (positives <= aliases), so the seed table
+    stays small no matter how large the mention corpus is. Output: (mention, class_id,
     label INT, provenance STRING)."""
-    matches = OntologyIndex.compile(ontology).alias_matches(mentions, 2 + n_hard)
+    matches = index.alias_matches(mentions, 2 + n_hard)
     # reference slice [3:2+num_neg]: ranks 4..2+n_hard
     hard = F.filter(
         F.slice("ranked", 4, max(n_hard - 1, 0)),
@@ -159,7 +159,7 @@ def bootstrap_seed_labels(
     # a constant rank filter lets Spark cut each mention's rows map-side
     # (WindowGroupLimit) before the window's shuffle
     easy = (
-        matches.crossJoin(F.broadcast(ontology.select("class_id")))
+        matches.crossJoin(F.broadcast(index.ontology.select("class_id")))
         .filter(~F.array_contains(F.concat("positives", "ranked"), F.col("class_id")))
         .withColumn("rr", F.row_number().over(hw))
         .filter(F.col("rr") <= n_easy)

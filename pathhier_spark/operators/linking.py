@@ -6,7 +6,7 @@ This is the heart of the engine — the reference's CandidateSelector
 (pathhier/pw_aligner.py:290-326,628-660), in two forms:
 
   * Spark column chains over any two token tables (candidate_pairs,
-    bow_link, ...):
+    fuse_channels, ...):
 
     source side:  entity_id -> distinct token set        (explode)
     target side:  entity_id -> distinct token set        (explode)
@@ -14,18 +14,18 @@ This is the heart of the engine — the reference's CandidateSelector
     cap:          row_number window, top-20 per source    (T1)
     features:     5-feature string vector per pair        (M1)
     fusion:       0.75*max(name) + 0.25*max(def)          (A2)
-    output:       threshold 0.25/0.1, top-10 per source   (T2)
 
   * OntologyIndex, the KG pipeline's linker: the ontology side compiled
     once on the driver into postings with IDF (the reference builds its
     candidate selector the same way, once), broadcast, and probed by one
-    Arrow-batched Python function per mention partition.
+    Arrow-batched Python function per mention partition. The same index
+    seeds the bootstrap and gives the canonical nodes.
 
 Scale design (100 TB / 10^12 docs):
-  * The ontology/dictionary side is small (10^4-10^6 classes) and already
-    collected to the driver for canonicalization — its postings are
-    broadcast, so linking never shuffles the (huge) mention side beyond
-    one distinct.
+  * The ontology/dictionary side is small (10^4-10^6 classes) and compiled
+    on the driver once per pipeline call — its postings are broadcast, so
+    linking never shuffles the (huge) mention side beyond one distinct, and
+    its union-find gives the canonical nodes.
   * No IDF floor is applied: config.IDF_LIMIT (pathhier/constants.py:13)
     is available to candidate_pairs as `idf_floor`, but the KG linker keeps
     every posting, as the reference's selector does, because pruning hot
@@ -158,8 +158,11 @@ class OntologyIndex:
     among them), and mathematically tied candidate scores (with 27
     classes, ln(28/9) = ln 2 + ln(14/9)) would then order differently at
     the top-20 cut. Rows with a null class_id are never linked and are
-    left out."""
+    left out. The frame it was compiled from is kept for the Spark steps
+    that read the ontology beside the probes (class names, the
+    easy-negative draw, the canonical-node frame's schema)."""
 
+    ontology: DataFrame
     tables: ProbeTables
     shipped: Broadcast
     canonical: list[tuple[str, str, int]]
@@ -203,7 +206,7 @@ class OntologyIndex:
             by_alias={norm: tuple(cids) for norm, cids in by_alias.items()},
         )
         canonical = canonical_labels((r["class_id"], r["synonyms"]) for r in rows)
-        return cls(tables, sc.broadcast(tables), canonical)
+        return cls(ontology, tables, sc.broadcast(tables), canonical)
 
     def link(self, mentions: DataFrame) -> DataFrame:
         """(mention) -> (mention, class_id, link_score): link_mentions'
@@ -417,47 +420,6 @@ def fuse_channels(
             ).alias("score"),
         )
         .filter(F.col("score") >= threshold)
-    )
-
-
-def top_matches(
-    scored: DataFrame,
-    *,
-    group_col: str = "s_id",
-    score_col: str = "score",
-    tie_col: str = "t_id",
-    top_n: int = config.KEEP_TOP_N_MATCHES,
-) -> DataFrame:
-    """pw_aligner.py:453-483 — top-10 matches per source id (S11/T2)."""
-    w = Window.partitionBy(group_col).orderBy(
-        F.col(score_col).desc(), F.col(tie_col)
-    )
-    return (
-        scored.withColumn("match_rank", F.row_number().over(w))
-        .filter(F.col("match_rank") <= top_n)
-    )
-
-
-def bow_link(
-    source_tokens: DataFrame,
-    target_tokens: DataFrame,
-    *,
-    threshold: float = config.BOW_SIMSCORE_THRESHOLD,
-    top_n: int = config.KEEP_TOP_N_MATCHES,
-    idf_floor: float | None = None,
-) -> DataFrame:
-    """pw_aligner.py:628-660 run_bow_model — the minimal end-to-end linking
-    query: candidate scores normalized by the global max, filtered >= 0.1,
-    top-10 per source. Returns (s_id, t_id, score, match_rank)."""
-    cands = candidate_pairs(
-        source_tokens, target_tokens, idf_floor=idf_floor
-    )
-    global_max = cands.agg(F.max("cand_score").alias("m"))
-    normed = cands.crossJoin(F.broadcast(global_max)).select(
-        "s_id", "t_id", (F.col("cand_score") / F.col("m")).alias("score")
-    )
-    return top_matches(
-        normed.filter(F.col("score") >= threshold), top_n=top_n
     )
 
 

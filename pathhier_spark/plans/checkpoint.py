@@ -7,16 +7,19 @@ pickles with skip-if-exists guards). We generalize that discipline to
 parquet stage outputs plus a lineage manifest:
 
   <root>/<stage>/            committed parquet output (atomic via _SUCCESS)
+                             + _FINGERPRINT, the fingerprint it was built under
   <root>/_lineage.jsonl      one row per committed stage:
                              {stage, fingerprint, rows, wall_ms, ts,
                               partitions, partition_rows, schema}
 
 A stage re-runs only if (a) its output is absent, or (b) its input
-fingerprint changed. A resumed stage is read with its recorded schema, so
-resuming writes nothing and runs no Spark job (parquet schema inference
-would run one per stage). That is the north rule's "resumable from checkpoint
-with per-partition lineage + metrics"; at cluster scale the same layout maps
-1:1 onto Iceberg table commits (swap the writer, keep the manifest)."""
+fingerprint changed, in its _FINGERPRINT or its last lineage row: a run
+killed between the two writes leaves a newer build under the older row. A
+resumed stage is read with its recorded schema, so resuming writes nothing
+and runs no Spark job (parquet schema inference would run one per stage).
+That is the north rule's "resumable from checkpoint with per-partition
+lineage + metrics"; at cluster scale the same layout maps 1:1 onto Iceberg
+table commits (swap the writer, keep the manifest)."""
 
 from __future__ import annotations
 
@@ -24,10 +27,14 @@ import json
 import os
 import time
 from collections.abc import Callable
+from pathlib import Path
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+_FINGERPRINT = "_FINGERPRINT"
 
 
 def _hidden(name: str) -> bool:
@@ -89,8 +96,10 @@ class CheckpointManager:
     def _committed(self, stage: str, fingerprint: str) -> dict | None:
         """The stage's last lineage row, if its output is committed under
         this fingerprint with a recorded schema."""
-        out = os.path.join(self.root, stage)
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        # written after _SUCCESS and deleted by an overwrite before it
+        # writes, the marker also stands for a finished write
+        marker = Path(self.root, stage, _FINGERPRINT)
+        if not marker.exists() or marker.read_text() != fingerprint:
             return None
         rows = [r for r in self.lineage() if r["stage"] == stage]
         if rows and rows[-1]["fingerprint"] == fingerprint and "schema" in rows[-1]:
@@ -121,6 +130,7 @@ class CheckpointManager:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
+        Path(out, _FINGERPRINT).write_text(fingerprint)
         part_rows = footer_row_counts(out, partition_by or [])
         n = sum(p["rows"] for p in part_rows)
         result = self.spark.read.parquet(out)

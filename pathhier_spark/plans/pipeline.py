@@ -3,17 +3,18 @@
     documents ──extract──> mentions ──link──> linked mentions
         ──assemble──> triples ──canonicalize──> canonical node/edge tables
 
-Each stage is a pure DataFrame -> DataFrame function; run_pipeline wires
-them through CheckpointManager so any stage resumes idempotently.
+Each stage is a pure DataFrame -> DataFrame function, chained once
+(_kg_stages): run_pipeline commits each stage through CheckpointManager so
+any stage resumes idempotently; run_pipeline_incremental runs it lazily
+and evaluates a batch's mentions and edges once each.
 
 Fixed Spark overhead per call is kept off ontology-sized work: the
-ontology is compiled once per call on the driver (OntologyIndex, one
-collect job) into broadcast postings, which linking and bootstrap seeding
-probe from one Arrow-batched Python function each, and whose union-find
-gives the canonical map; bootstrap_rescore_links fits its LR on the seed
-table without running the bootstrap iterations its model never uses; and
-run_pipeline_incremental evaluates a batch's mentions and edges once each,
-however many branches of the commit read them.
+ontology is compiled at most once per call on the driver (OntologyIndex,
+one collect job, none when every stage resumes) into broadcast postings,
+which linking and bootstrap seeding probe from one Arrow-batched Python
+function each, and whose union-find gives the canonical nodes;
+bootstrap_rescore_links fits its LR on the seed table without running the
+bootstrap iterations its model never uses.
 
 Linking semantics (reference chain): token inverted-index candidates with
 IDF scoring (candidate_selector.py:148-178) capped at top-20
@@ -23,6 +24,9 @@ SIMSCORE_THRESHOLD=0.25, finally top-1 per mention.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -198,6 +202,51 @@ def _content_key(df: DataFrame, *cols) -> str:
     return f"{n}:{h}"
 
 
+def _kg_stages(
+    documents: DataFrame,
+    index: Callable[[], OntologyIndex],
+    commit: Callable[..., DataFrame],
+) -> dict[str, DataFrame]:
+    """The stage chain extracted -> mentions -> links -> triples,
+    canonical_nodes -> edges. Each stage's build is handed to
+    commit(name, build, partition_by=None), and the later stages read what
+    commit returns. `index` returns the compiled ontology and is called
+    only by builds, so a memoized one compiles at most once per call and
+    not at all when commit builds nothing."""
+    extracted = commit(
+        "extracted",
+        lambda: with_extracted_text(documents).select(
+            "url", "warc_ts", "lang", "extracted_text"
+        ),
+    )
+    mentions = commit(
+        "mentions",
+        lambda: extract_mentions(extracted.withColumnRenamed("extracted_text", "text")),
+    )
+    links = commit(
+        "links",
+        lambda: index().link(
+            mentions.select(F.col("subj_mention").alias("mention")).union(
+                mentions.select(F.col("obj_mention").alias("mention"))
+            )
+        ),
+    )
+    triples = commit("triples", lambda: assemble_triples(mentions, links), ["pred"])
+    canon = commit(
+        "canonical_nodes",
+        lambda: _canonical_frame(index().ontology, index().canonical),
+    )
+    edges = commit("edges", lambda: canonical_edges(triples, canon), ["pred"])
+    return {
+        "extracted": extracted,
+        "mentions": mentions,
+        "links": links,
+        "triples": triples,
+        "canonical_nodes": canon,
+        "edges": edges,
+    }
+
+
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
@@ -211,7 +260,8 @@ def run_pipeline(
     documents' content hash, canonical_nodes on the ontology's, and the
     link-dependent stages on both plus the config constants linking reads.
     A different corpus or ontology therefore reruns exactly the stages that
-    read it, whatever its size."""
+    read it, whatever its size. The ontology is compiled by the first stage
+    that reruns and shared by the rest."""
     cp = CheckpointManager(spark, checkpoint_root)
     docs_fp = "docs=" + _content_key(documents, "url", "warc_ts", "lang", "html")
     onto_fp = "onto=" + _content_key(
@@ -221,61 +271,25 @@ def run_pipeline(
         f"{docs_fp}|{onto_fp}|link={config.KEEP_TOP_N_CANDIDATES},"
         f"{config.SIMSCORE_THRESHOLD},{config.NAME_WEIGHT},{config.DEF_WEIGHT}"
     )
-
-    extracted = cp.stage(
-        "extracted",
-        lambda: with_extracted_text(documents).select(
-            "url", "warc_ts", "lang", "extracted_text"
-        ),
-        fingerprint=docs_fp,
-    )
-    mentions = cp.stage(
-        "mentions",
-        lambda: extract_mentions(
-            extracted.withColumnRenamed("extracted_text", "text")
-        ),
-        fingerprint=docs_fp,
-    )
-    links = cp.stage(
-        "links",
-        lambda: link_mentions(
-            mentions.select(F.col("subj_mention").alias("mention")).union(
-                mentions.select(F.col("obj_mention").alias("mention"))
-            ),
-            ontology,
-        ),
-        fingerprint=link_fp,
-    )
-    triples = cp.stage(
-        "triples",
-        lambda: assemble_triples(mentions, links),
-        fingerprint=link_fp,
-        partition_by=["pred"],
-    )
-    rescored = cp.stage(
-        "links_rescored",
-        lambda: bootstrap_rescore_links(spark, links, ontology),
-        fingerprint=link_fp,
-    )
-    canon = cp.stage(
-        "canonical_nodes", lambda: canonicalize_classes(ontology), fingerprint=onto_fp
-    )
-    edges = cp.stage(
-        "edges",
-        lambda: canonical_edges(triples, canon),
-        fingerprint=link_fp,
-        partition_by=["pred"],
-    )
-    return {
-        "extracted": extracted,
-        "mentions": mentions,
-        "links": links,
-        "links_rescored": rescored,
-        "triples": triples,
-        "canonical_nodes": canon,
-        "edges": edges,
-        "lineage": spark.createDataFrame(cp.lineage()),
+    fingerprints = {
+        "extracted": docs_fp, "mentions": docs_fp, "canonical_nodes": onto_fp
     }
+    index = cache(lambda: OntologyIndex.compile(ontology))
+    out = _kg_stages(
+        documents,
+        index,
+        lambda name, build, partition_by=None: cp.stage(
+            name, build, fingerprint=fingerprints.get(name, link_fp),
+            partition_by=partition_by,
+        ),
+    )
+    out["links_rescored"] = cp.stage(
+        "links_rescored",
+        lambda: _rescore_links(out["links"], index()),
+        fingerprint=link_fp,
+    )
+    out["lineage"] = spark.createDataFrame(cp.lineage())
+    return out
 
 
 def run_pipeline_incremental(
@@ -296,8 +310,8 @@ def run_pipeline_incremental(
     in tests): every stage is per-document except linking, whose IDF and
     candidate postings come from the ONTOLOGY side only (link_mentions) —
     no corpus-level statistic exists to drift between batch and full runs.
-    The ontology is compiled once per batch (OntologyIndex), for both the
-    link probe and the canonical map.
+    The stages are run_pipeline's, uncommitted; the ontology is compiled
+    once per batch, for both the link probe and the canonical nodes.
 
     Per-batch cost is proportional to the batch (the 10^12-document
     story: the crawl delta, not the corpus, pays extraction+linking);
@@ -311,25 +325,17 @@ def run_pipeline_incremental(
     from pathhier_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(spark, warehouse_root)
-    index = OntologyIndex.compile(ontology)
-    extracted = with_extracted_text(new_documents).select(
-        "url", "warc_ts", "lang", "extracted_text"
+    out = _kg_stages(
+        new_documents,
+        cache(lambda: OntologyIndex.compile(ontology)),
+        lambda name, build, partition_by=None: build(),
     )
     # mentions feed both link sides and assemble; edges feed the write, or
     # the upserts and the tombstone anti-join. Each is evaluated once per
     # batch (mentions first, so edges reads it cached) and released after
     # the commit, instead of re-running extraction and linking per branch.
-    mentions = extract_mentions(
-        extracted.withColumnRenamed("extracted_text", "text")
-    ).persist()
-    links = index.link(
-        mentions.select(F.col("subj_mention").alias("mention")).union(
-            mentions.select(F.col("obj_mention").alias("mention"))
-        )
-    )
-    triples = assemble_triples(mentions, links)
-    canon = _canonical_frame(ontology, index.canonical)
-    edges = canonical_edges(triples, canon).persist()
+    mentions = out["mentions"].persist()
+    edges = out["edges"].persist()
     fingerprint = f"batch:{batch_id}"
     try:
         mentions.count()
@@ -367,8 +373,8 @@ def run_pipeline_incremental(
         mentions.unpersist()
     return {
         "mentions": mentions,
-        "links": links,
-        "triples": triples,
+        "links": out["links"],
+        "triples": out["triples"],
         "edges_delta": edges,
         "edges": wh.read(edges_table),
     }
@@ -393,6 +399,10 @@ def bootstrap_rescore_links(
     the loop's final fit drops every row its iterations added
     (pw_aligner.py:587, P8), so that model is exactly fit_lr over the
     collected seed table (asserted equal in tests)."""
+    return _rescore_links(links, OntologyIndex.compile(ontology))
+
+
+def _rescore_links(links: DataFrame, index: OntologyIndex) -> DataFrame:
     from pathhier_spark.operators.bootstrap import (
         bootstrap_seed_labels,
         collect_training_rows,
@@ -404,7 +414,7 @@ def bootstrap_rescore_links(
         pair_features,
     )
 
-    class_names = F.broadcast(ontology.select(F.col("class_id"), F.col("name")))
+    class_names = F.broadcast(index.ontology.select("class_id", "name"))
     named = links.join(class_names, "class_id")
     feats = pair_features(named, "mention", "name").select(
         F.col("mention").alias("s_id"),
@@ -420,7 +430,7 @@ def bootstrap_rescore_links(
     # class_id exists in the ontology by construction of the link probe.
     seed = pair_features(
         bootstrap_seed_labels(
-            feats.select(F.col("s_id").alias("mention")), ontology
+            feats.select(F.col("s_id").alias("mention")), index
         ).join(class_names, "class_id"),
         "mention",
         "name",

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from pathhier_spark.operators.bootstrap import bootstrap_loop
 from pathhier_spark.operators.embeddings import entity_bow_embeddings
-from pathhier_spark.operators.linking import FEATURE_COLS, pair_features
+from pathhier_spark.operators.linking import FEATURE_COLS, OntologyIndex, pair_features
 from pathhier_spark.plans.pipeline import expand_structural_tokens, ontology_token_table
 from pathhier_spark.sources import corpus as corpus_mod
 
@@ -58,7 +58,7 @@ def test_bootstrap_seed_labels(spark):
         .union(m.select(F.col("obj_mention").alias("mention")))
         .distinct()
     )
-    seeds = bootstrap_seed_labels(mentions, onto)
+    seeds = bootstrap_seed_labels(mentions, OntologyIndex.compile(onto))
     counts = {
         r["provenance"]: r["n"]
         for r in seeds.groupBy("provenance").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -73,7 +73,7 @@ def test_bootstrap_seed_labels(spark):
     # deterministic
     again = {
         (r["mention"], r["class_id"], r["label"], r["provenance"])
-        for r in bootstrap_seed_labels(mentions, onto).collect()
+        for r in bootstrap_seed_labels(mentions, OntologyIndex.compile(onto)).collect()
     }
     assert again == {
         (r["mention"], r["class_id"], r["label"], r["provenance"])
@@ -195,7 +195,8 @@ def test_seed_labels_match_spark_oracle(spark, tie_heavy_ontology, inputs):
         mentions, onto = _tie_heavy_mentions(spark, tie_heavy_ontology)
     mentions = mentions.localCheckpoint(eager=True)
     cols = ["mention", "class_id", "label", "provenance"]
-    got = [tuple(r) for r in bootstrap_seed_labels(mentions, onto).select(*cols).collect()]
+    seeds = bootstrap_seed_labels(mentions, OntologyIndex.compile(onto))
+    got = [tuple(r) for r in seeds.select(*cols).collect()]
     want = {tuple(r) for r in _spark_seed_labels(mentions, onto).select(*cols).collect()}
     assert len(got) == len(set(got))
     assert set(got) == want

@@ -11,13 +11,11 @@ from pathhier_spark.functions import oracle
 from pathhier_spark.functions.text import idf_table
 from pathhier_spark.operators.linking import (
     FEATURE_COLS,
-    bow_link,
     candidate_pairs,
     entity_token_table,
     fuse_channels,
     lr_score,
     pair_features,
-    top_matches,
 )
 
 
@@ -134,37 +132,6 @@ def test_fuse_channels(spark):
     df = spark.createDataFrame(rows, "s_id string, t_id string, score double, data_type string")
     got = {(r["s_id"], r["t_id"]): r["score"] for r in fuse_channels(df).collect()}
     assert got == {("a", "x"): pytest.approx(0.75 * 0.8 + 0.25 * 0.4)}
-
-
-def test_top_matches_cap_and_ties(spark):
-    rows = [("s", f"t{i:02d}", 1.0 - 0.01 * i) for i in range(15)]
-    rows += [("s", "t00b", 1.0)]  # tie with t00 -> deterministic by t_id
-    df = spark.createDataFrame(rows, "s_id string, t_id string, score double")
-    got = top_matches(df).collect()
-    assert len(got) == config.KEEP_TOP_N_MATCHES
-    assert got[0]["t_id"] in ("t00", "t00b")
-
-
-def test_bow_link_end_to_end(spark):
-    got = bow_link(_tok_df(spark, SOURCE), _tok_df(spark, TARGET))
-    rows = got.collect()
-    assert all(0.0 <= r["score"] <= 1.0 for r in rows)
-    assert max(r["score"] for r in rows) == pytest.approx(1.0)
-    # s4 shares no tokens -> absent
-    assert not [r for r in rows if r["s_id"] == "s4"]
-    # normalization matches oracle: score = cand/max over all pairs
-    want = _oracle_candidates(SOURCE, TARGET)
-    best = max(s for ranked in want.values() for _, s in ranked)
-    want_scores = {
-        (sid, tid): s / best
-        for sid, ranked in want.items()
-        for tid, s in ranked
-        if s / best >= config.BOW_SIMSCORE_THRESHOLD
-    }
-    got_scores = {(r["s_id"], r["t_id"]): r["score"] for r in rows}
-    assert set(got_scores) == set(want_scores)
-    for k, v in want_scores.items():
-        assert got_scores[k] == pytest.approx(v)
 
 
 def test_entity_token_table(spark):

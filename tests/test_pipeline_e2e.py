@@ -26,6 +26,21 @@ def _file_tree(root):
     }
 
 
+def _count_compiles(monkeypatch):
+    """A list that grows by one entry per OntologyIndex.compile call."""
+    from pathhier_spark.operators.linking import OntologyIndex
+
+    calls = []
+    compile_ = OntologyIndex.compile.__func__
+
+    def counting(cls, ontology):
+        calls.append(ontology)
+        return compile_(cls, ontology)
+
+    monkeypatch.setattr(OntologyIndex, "compile", classmethod(counting))
+    return calls
+
+
 def test_pipeline_pr_and_resume(spark, corpus, tmp_path_factory, spark_jobs):
     docs, onto, gold_triples, gold_mentions, xref_pairs, gold_components = corpus
     root = str(tmp_path_factory.mktemp("ckpt"))
@@ -129,11 +144,12 @@ def test_crash_resume_recomputes_only_missing_stage(spark, corpus, tmp_path_fact
     assert h(out2["edges"]) == edges_hash
 
 
-def test_resume_keys_on_input_content(spark, tmp_path_factory):
+def test_resume_keys_on_input_content(spark, tmp_path_factory, monkeypatch):
     """Stage fingerprints hash the inputs' content, not their size: a crawl
     of the same size with one page edited reruns every document-dependent
     stage and matches a fresh-root run; an alias edit reruns only the
-    stages that read the ontology."""
+    stages that read the ontology. Every run compiles the ontology once,
+    for all the stages it reruns."""
     c = corpus_mod.generate(n_classes=40, n_docs=40, seed=11)
     docs, onto, *_ = corpus_mod.to_spark(spark, c)
     root = str(tmp_path_factory.mktemp("content"))
@@ -148,7 +164,9 @@ def test_resume_keys_on_input_content(spark, tmp_path_factory):
         new = [r["stage"] for r in out["lineage"].collect()[n_before:]]
         return out, set(new)
 
+    compiles = _count_compiles(monkeypatch)
     base = rows(run_pipeline(spark, docs, onto, root)["triples"])
+    assert len(compiles) == 1
 
     # same page count, one page's html replaced by another page's
     first, other = docs.orderBy("url").limit(2).collect()
@@ -158,9 +176,11 @@ def test_resume_keys_on_input_content(spark, tmp_path_factory):
             F.col("html")
         ),
     )
+    compiles.clear()
     out, new = rerun(edited, onto)
     assert new == {"extracted", "mentions", "links", "triples",
                    "links_rescored", "edges"}
+    assert len(compiles) == 1
     got = rows(out["triples"])
     assert got != base
     fresh = run_pipeline(spark, edited, onto, str(tmp_path_factory.mktemp("fresh")))
@@ -178,8 +198,10 @@ def test_resume_keys_on_input_content(spark, tmp_path_factory):
             ),
         ).otherwise(F.col("aliases")),
     )
+    compiles.clear()
     _, new = rerun(edited, renamed)
     assert new == {"links", "triples", "links_rescored", "canonical_nodes", "edges"}
+    assert len(compiles) == 1
 
 
 def test_structural_tokens_widen_candidate_recall(spark):
@@ -232,8 +254,8 @@ def test_incremental_batches_equal_full_run(spark, corpus, tmp_path_factory,
     """Batch-wise incremental ingest == one full run over the union: no
     stage carries corpus-level state (linking IDF is ontology-side), so
     splitting the crawl into batches must not change a single edge. Each
-    batch runs the html->text UDF once per batch document, for the
-    table-creating write and for a merge alike."""
+    batch runs the html->text UDF once per batch document and compiles the
+    ontology once, for the table-creating write and for a merge alike."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -263,10 +285,13 @@ def test_incremental_batches_equal_full_run(spark, corpus, tmp_path_factory,
     b1 = docs.filter(F.crc32(F.col("url")) % 2 == 0)
     b2 = docs.filter(F.crc32(F.col("url")) % 2 == 1)
     n1, n2 = b1.count(), b2.count()
+    compiles = _count_compiles(monkeypatch)
     run_pipeline_incremental(spark, b1, onto, wh_root, "b1")
     assert calls.value == n1
+    assert len(compiles) == 1
     out2 = run_pipeline_incremental(spark, b2, onto, wh_root, "b2")
     assert calls.value == n1 + n2
+    assert len(compiles) == 2
     inc_edges = {tuple(r) for r in out2["edges"].select(*cols).collect()}
     assert inc_edges == full_edges
     # partition layout pinned by the first batch survives the merge
@@ -338,7 +363,12 @@ def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus, spark_job
         bootstrap_seed_labels,
     )
     from pathhier_spark.operators.extract import extract_mentions, with_extracted_text
-    from pathhier_spark.operators.linking import FEATURE_COLS, lr_score, pair_features
+    from pathhier_spark.operators.linking import (
+        FEATURE_COLS,
+        OntologyIndex,
+        lr_score,
+        pair_features,
+    )
     from pathhier_spark.plans.pipeline import bootstrap_rescore_links, link_mentions
 
     docs, onto, *_ = corpus
@@ -363,7 +393,8 @@ def test_bootstrap_rescore_matches_bootstrap_loop_model(spark, corpus, spark_job
         F.col("mention").alias("s_id"), F.col("class_id").alias("t_id"), *FEATURE_COLS
     ).localCheckpoint(eager=True)
     seed_pairs = bootstrap_seed_labels(
-        feats.select(F.col("s_id").alias("mention")).distinct(), onto
+        feats.select(F.col("s_id").alias("mention")).distinct(),
+        OntologyIndex.compile(onto),
     )
     assert seed_pairs.limit(1).count() == 1
     seed = pair_features(
@@ -403,3 +434,26 @@ def test_checkpoint_lineage_counts_match_spark(spark, tmp_path):
         {"partition": "*", "rows": flat.count()}
     ]
     assert rows["flat"]["rows"] == 40
+
+
+def test_checkpoint_crash_before_lineage_is_not_resumed(spark, tmp_path, monkeypatch):
+    """A run killed after its parquet write but before its lineage row
+    leaves the directory holding another fingerprint's rows; a later run
+    asking for the last committed fingerprint must rebuild, not read them."""
+    def frame(*ns):
+        return lambda: spark.createDataFrame([(n,) for n in ns], "n int")
+
+    def killed(row):
+        raise RuntimeError("killed before the lineage row")
+
+    root = str(tmp_path)
+    CheckpointManager(spark, root).stage("s", frame(1, 2), fingerprint="A")
+    crashed = CheckpointManager(spark, root)
+    monkeypatch.setattr(crashed, "_append_lineage", killed)
+    with pytest.raises(RuntimeError):
+        crashed.stage("s", frame(9), fingerprint="B")
+
+    cp = CheckpointManager(spark, root)
+    got = cp.stage("s", frame(1, 2), fingerprint="A")
+    assert sorted(r["n"] for r in got.collect()) == [1, 2]
+    assert [r["fingerprint"] for r in cp.lineage()] == ["A", "A"]
